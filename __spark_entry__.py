@@ -29,9 +29,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     Only ``gated`` registry entries are exported: the driver records a
-    bounded number of entries (50 in round 1), so near-duplicate operator
-    shapes are registered gated=False — still swept by the local oracle
-    gate (tests/test_oracle_gate.py), just not occupying driver slots.
+    bounded number of entries (50 in round 1), so only the names in
+    ``sparkroach/queries/rotation.py``'s window are exported; the rest
+    are swept by the local oracle gate (tests/test_oracle_gate.py).
     Oracle-bearing entries come first; rows-only entries last."""
     gated = {name: q for name, q in QUERIES.items() if q.gated}
     ordered = {n: q.fn for n, q in gated.items() if q.oracle is not None}

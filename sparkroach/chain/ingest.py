@@ -23,7 +23,7 @@ The ON CONFLICT clause semantics (writer.go:39-114) are reproduced exactly:
 from __future__ import annotations
 
 import json
-import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,8 +40,7 @@ from sparkroach.chain.store import ChainStore
 MIGRATION_DONE_SENTINEL = (1 << 63) - 1
 
 #: floor on blocks per task when re-sizing an over-split micro-batch
-#: (env-tunable: per-block work varies by deployment payset size)
-_MIN_BLOCKS_PER_TASK = int(os.environ.get("SPARKROACH_BLOCKS_PER_TASK", "4"))
+_MIN_BLOCKS_PER_TASK = 4
 
 
 class RoundGateError(ValueError):
@@ -172,7 +171,7 @@ class ChainDB:
 
     # -- block ingest (A1-A19) ------------------------------------------------
 
-    def add_blocks(self, blocks: DataFrame, strict: bool = True) -> int:
+    def add_blocks(self, blocks: DataFrame) -> int:
         """Ingest a micro-batch of blocks.  Rounds must continue the high-
         water mark exactly; already-ingested rounds are skipped (idempotent
         replay); a gap raises RoundGateError.  Returns blocks applied."""
@@ -191,46 +190,6 @@ class ChainDB:
         # (r8 optimization; previously the gate collect ran on the raw
         # input and the cache was only installed after the round filter).
         blocks = blocks.cache()
-        # r9 (guide §2.6, verdict items 3/4): the account MERGE is the
-        # batch's critical path (span profile: serial gate collect ~0.8 s,
-        # then the merge ~2.7 s of which ~1.3 s is the FOLD — the depth-1
-        # flatten + tagged union + groupBy(addr) — and the rest the
-        # full-outer join + bucket write).  The fold is PURE COMPUTATION:
-        # no manifest is touched, so running it BEFORE the round gate
-        # cannot violate gate semantics — a gate failure just discards
-        # the materialized frame, and nothing was written.  It is
-        # submitted here, concurrently with the gate collect; the two
-        # jobs share one cache fill (per-partition cache locks make
-        # whichever job arrives first compute the conversion), so the
-        # wall cost of the serial region becomes max(collect, fold)
-        # instead of collect + fold.  The round filter used here —
-        # (round >= nxt) & (round != 0) — equals the post-gate
-        # set(todo) filter in every gate-PASSING case (todo is exactly
-        # the consecutive rounds from nxt), and in the failing/replay
-        # cases the result is discarded.  The fold always takes the
-        # fused balance+sig-delta path: with an empty payset the sig
-        # stream is empty and max_by/max(is_sig) reproduce the no-txn
-        # variant's NULL keytype_delta / delta_present=false exactly.
-        from concurrent.futures import Future, ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=6)
-        pre_nz = blocks.where(
-            (F.col("round") >= F.lit(nxt)) & (F.col("round") != 0)
-        )
-
-        def _eager_fold():
-            acct, upd = self._account_fold(pre_nz)
-            return acct.localCheckpoint(eager=True), upd
-
-        # SPARKROACH_EAGER_ACCOUNT_FOLD=0 defers the fold to merge time
-        # (the pre-r9 schedule) — kept as the interleaved-A/B toggle and
-        # as an escape hatch for feeds where replayed batches are common
-        # enough that pre-gate work would mostly be discarded.
-        if os.environ.get("SPARKROACH_EAGER_ACCOUNT_FOLD", "1") != "0":
-            fold_fut = pool.submit(_eager_fold)
-        else:
-            fold_fut = Future()
-            fold_fut.set_result(None)  # sentinel: fold at merge time
         # one driver-side collect for all scalar bookkeeping: rounds,
         # special accounts, and per-delta sizes (to skip no-op merges)
         meta_rows = blocks.select(
@@ -252,37 +211,22 @@ class ChainDB:
                 F.lit(0),
             ).alias("n_inner"),
         ).collect()
-        def _abort():
-            # the eager fold may still be in flight and reads the cached
-            # batch: drain it (errors included — the batch is being
-            # discarded anyway) before releasing the cache and the pool
-            try:
-                fold_fut.result()
-            except Exception:
-                pass
-            pool.shutdown(wait=True)
-            blocks.unpersist()
-
         rounds = sorted({r["round"] for r in meta_rows})
-        if not rounds:
-            _abort()
-            return 0
         todo = [r for r in rounds if r >= nxt]
         if not todo:
-            _abort()
-            return 0  # pure replay of already-applied rounds
-        if strict:
-            try:
-                if todo[0] != nxt:
-                    raise RoundGateError(
-                        f"next expected round {nxt}, got {todo[0]} (gap)"
-                    )
-                for a, b in zip(todo, todo[1:]):
-                    if b != a + 1:
-                        raise RoundGateError(f"non-consecutive rounds {a} → {b}")
-            except RoundGateError:
-                _abort()
-                raise
+            blocks.unpersist()
+            return 0  # empty batch, or pure replay of applied rounds
+        try:
+            if todo[0] != nxt:
+                raise RoundGateError(
+                    f"next expected round {nxt}, got {todo[0]} (gap)"
+                )
+            for a, b in zip(todo, todo[1:]):
+                if b != a + 1:
+                    raise RoundGateError(f"non-consecutive rounds {a} → {b}")
+        except RoundGateError:
+            blocks.unpersist()
+            raise
         applied = [r for r in meta_rows if r["round"] in set(todo)]
         # AddBlock0 semantics (cockroach.go:159-165): round 0 writes ONLY
         # the block header and special accounts — its payset/delta (genesis
@@ -363,17 +307,7 @@ class ChainDB:
         n_upd = {k: sum(r[k] for r in nz_applied) for k in
                  ("n_accts", "n_assets", "n_apps", "n_boxes")}
         def _merge_account_task():
-            # consume the eagerly-materialized fold (submitted before the
-            # gate collect; see the r9 comment above): the merge task is
-            # left with just the full-outer bucket join + write — the
-            # fold half of the old critical path already ran, overlapped
-            # with the serial gate region
-            res = fold_fut.result()
-            # deferred branch reproduces the pre-r9 schedule faithfully:
-            # lazy fold over the coalesced batch, inside the merge job
-            acct, upd = (
-                res if res is not None else self._account_fold(nz_blocks)
-            )
+            acct, upd = self._account_fold(nz_blocks)
             self._merge_account(
                 acct,
                 touch_keys=upd.select("addr"),
@@ -397,12 +331,10 @@ class ChainDB:
         # session (r8 ADVICE): unpersist runs on EVERY exit path, while
         # the metastate commit (the exactly-once commit point) still runs
         # only after every table job succeeded.
+        pool = ThreadPoolExecutor(max_workers=6)
         try:
             if flat is not None:
                 flat_ready = pool.submit(flat.count)
-            else:
-                flat_ready = Future()
-                flat_ready.set_result(0)
             for fut in [pool.submit(t) for t in tasks]:
                 fut.result()  # re-raise the first failure
 
@@ -426,14 +358,6 @@ class ChainDB:
                 }
             )
         finally:
-            # a still-running eager fold holds cache references even when
-            # the merge task was never scheduled (has["n_accts"] false) or
-            # a sibling task failed first — drain it before unpersisting
-            if not fold_fut.done():
-                try:
-                    fold_fut.result()
-                except Exception:
-                    pass
             pool.shutdown(wait=True)
             if flat is not None:
                 flat.unpersist()
@@ -442,8 +366,7 @@ class ChainDB:
 
     def _account_fold(self, blocks: DataFrame) -> tuple[DataFrame, DataFrame]:
         """(folded account frame, raw update stream) for one micro-batch —
-        the pure-computation half of the account merge, safe to run
-        before the round gate (no writes).
+        the pure-computation half of the account merge.
 
         Fused fold (r8): the balance-update stream and the root-txn
         sig-delta stream are BOTH last-wins folds keyed by addr, so one

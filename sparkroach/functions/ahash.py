@@ -68,37 +68,3 @@ def ahash_bands(rgb) -> list[int]:
     return ahash_bands_grid(rgb, 8)
 
 
-def phash_bands(rgb) -> list[int]:
-    """64-bit DCT pHash as four 16-bit bands (classic pHash: 32x32
-    grayscale downsample → 2-D DCT-II → keep the 8x8 low-frequency
-    corner minus DC → median threshold).
-
-    Float arithmetic (DCT) — used by the STRESS measurement to compare
-    hash richness; not oracle-gated (the gate plane stays integer).
-    Dims must be divisible by 8 (the 32x32 resample uses exact box
-    means when possible, else nearest-index sampling — deterministic).
-    """
-    import numpy as np
-
-    h, w = rgb.shape[0], rgb.shape[1]
-    gray = rgb.astype(np.float64).mean(axis=2)
-    if h % 32 == 0 and w % 32 == 0:
-        g32 = gray.reshape(32, h // 32, 32, w // 32).mean(axis=(1, 3))
-    else:  # nearest-index resample (deterministic)
-        yi = (np.arange(32) * h) // 32
-        xi = (np.arange(32) * w) // 32
-        g32 = gray[np.ix_(yi, xi)]
-    k = np.arange(32)
-    basis = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 64)
-    dct = basis @ g32 @ basis.T
-    low = dct[:8, :8].copy().reshape(-1)
-    coeffs = low[1:]  # drop DC
-    med = np.median(coeffs)
-    bits = np.concatenate(([0], (coeffs > med).astype(np.int64)))
-    bands: list[int] = []
-    for b in range(4):
-        v = 0
-        for j in range(16):
-            v |= int(bits[16 * b + j]) << j
-        bands.append(v)
-    return bands

@@ -268,174 +268,3 @@ def encode_doc_color_mjpeg(doc_id: int) -> bytes:
             encode_jpeg(img, restart_interval=f % 2, subsampling="420")
         )
     return encode_avi_mjpeg(frames, w, h, fps=10)
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same mapInPandas plumbing as functions.jpeg / media)
-# ---------------------------------------------------------------------------
-
-
-def synthesize_mjpeg_media(docs):
-    """(doc_id) → (media_id, payload) with REAL MJPEG-AVI bytes."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.avi import encode_doc_mjpeg
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        encode_doc_mjpeg(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def mjpeg_frame_features(media, stride: int = 2):
-    """(media_id, payload) → one row per SAMPLED frame (every
-    ``stride``-th, the multimodal_frame_sample policy): container
-    metadata + the decoded frame's exact pixel sum.
-
-    100 TB posture: map-only — each video decodes independently inside
-    its Arrow batch, no shuffle; at cluster scale payloads arrive via
-    binaryFile/blob columns partitioned by file and the per-row output
-    stays bounded by n_frames/stride."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.avi import parse_avi_mjpeg
-        from sparkroach.functions.jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                v = parse_avi_mjpeg(bytes(payload))
-                for fi in range(0, len(v["frames"]), stride):
-                    d = decode_jpeg(v["frames"][fi])
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": fi,
-                            "width": d["width"],
-                            "height": d["height"],
-                            "n_frames": v["n_frames"],
-                            "pixel_sum": d["pixel_sum"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "n_frames", "pixel_sum",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)
-
-
-def synthesize_color_mjpeg_media(docs):
-    """(doc_id) → (media_id, payload) with REAL color MJPEG-AVI bytes."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.avi import encode_doc_color_mjpeg
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        encode_doc_color_mjpeg(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def color_mjpeg_frame_features(media, stride: int = 2):
-    """(media_id, payload) → one row per SAMPLED frame: container
-    metadata + the decoded frame's exact pixel/plane sums (full-res RGB
-    and Y, quarter-res Cb+Cr — the columns proving the 4:2:0 chroma
-    decoded exactly inside the container).  Map-only, like
-    mjpeg_frame_features."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-            T.StructField("y_sum", T.LongType()),
-            T.StructField("chroma_sum", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.avi import parse_avi_mjpeg
-        from sparkroach.functions.jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                v = parse_avi_mjpeg(bytes(payload))
-                for fi in range(0, len(v["frames"]), stride):
-                    d = decode_jpeg(v["frames"][fi])
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": fi,
-                            "width": d["width"],
-                            "height": d["height"],
-                            "n_frames": v["n_frames"],
-                            "pixel_sum": d["pixel_sum"],
-                            "y_sum": d["plane_sums"][0],
-                            "chroma_sum": d["plane_sums"][1]
-                            + d["plane_sums"][2],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "n_frames", "pixel_sum", "y_sum", "chroma_sum",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)

@@ -207,77 +207,3 @@ def sbwt_decompress(blob: bytes) -> bytes:
     if zlib.crc32(data) & 0xFFFFFFFF != crc:
         raise ValueError("sbwt: CRC mismatch after inverse transform")
     return data
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same two-stage mapInPandas plumbing as the LZ4 lane)
-# ---------------------------------------------------------------------------
-
-
-def compress_documents(docs):
-    """(doc_id, text) → (doc_id, payload) with real SBWT containers."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.bwt import sbwt_compress
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        sbwt_compress(str(t).encode("utf-8"))
-                        for t in pdf["text"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(_encode, schema)
-
-
-def decompress_features(comp):
-    """(doc_id, payload) → roundtrip features: decoded byte length,
-    compressed container length, and the md5-derived 32-bit hash of the
-    DECODED text."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("plain_bytes", T.LongType()),
-            T.StructField("text_h32", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        import hashlib
-
-        from sparkroach.functions.bwt import sbwt_decompress
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = sbwt_decompress(bytes(payload))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "plain_bytes": len(raw),
-                        "text_h32": int(
-                            hashlib.md5(raw).hexdigest()[:8], 16
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "plain_bytes", "text_h32"]
-            )
-
-    return comp.mapInPandas(_decode, schema)

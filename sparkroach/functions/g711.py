@@ -73,85 +73,3 @@ def doc_pcm_samples(doc_id: int) -> list[int]:
     return [
         ((doc_id * 97 + i * 1031) % 65536) - 32768 for i in range(N_SAMPLES)
     ]
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same mapInPandas plumbing as functions.jpeg / png)
-# ---------------------------------------------------------------------------
-
-
-def synthesize_g711_media(docs):
-    """(doc_id) → (media_id, payload) with real µ-law byte streams."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.g711 import doc_pcm_samples, mulaw_encode
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        mulaw_encode(doc_pcm_samples(int(i)))
-                        for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def g711_features(media):
-    """(media_id, payload) → decoded roundtrip features: the decoded-
-    sample sum, the byte checksum of the wire form, and the worst
-    quantization error vs the original samples (re-derived from
-    media_id — the lane carries no side channel)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("decoded_sum", T.LongType()),
-            T.StructField("byte_sum", T.LongType()),
-            T.StructField("max_abs_err", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.g711 import doc_pcm_samples, mulaw_decode
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = mulaw_decode(bytes(payload))
-                orig = doc_pcm_samples(int(mid))
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "n_samples": len(dec),
-                        "decoded_sum": sum(dec),
-                        "byte_sum": sum(bytes(payload)),
-                        "max_abs_err": max(
-                            abs(d - o) for d, o in zip(dec, orig)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "decoded_sum", "byte_sum",
-                    "max_abs_err",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)

@@ -262,69 +262,3 @@ def encode_doc_gif(doc_id: int) -> bytes:
         for x in range(w)
     ]
     return encode_gif(idx, w, h, gif_palette())
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same mapInPandas plumbing as functions.jpeg / png)
-# ---------------------------------------------------------------------------
-
-
-def synthesize_gif_media(docs):
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.gif import encode_doc_gif
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        encode_doc_gif(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def gif_features(media):
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_colors", T.IntegerType()),
-            T.StructField("index_sum", T.LongType()),
-            T.StructField("rgb_sum", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.gif import decode_gif
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_gif(bytes(payload))
-                rows.append({"media_id": int(mid), **d})
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_colors",
-                    "index_sum", "rgb_sum",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)

@@ -805,156 +805,3 @@ def encode_doc_color_jpeg(doc_id: int) -> bytes:
                 pr + t, pg + t, pb + t,
             )
     return encode_jpeg(img, restart_interval=doc_id % 2, subsampling="420")
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same mapInPandas plumbing as functions.media)
-# ---------------------------------------------------------------------------
-
-
-def synthesize_jpeg_media(docs):
-    """(doc_id) → (media_id, payload) with REAL baseline-JFIF bytes."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.jpeg import encode_doc_jpeg
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        encode_doc_jpeg(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def synthesize_color_jpeg_media(docs):
-    """(doc_id) → (media_id, payload) with REAL 4:2:0 color JFIF bytes."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.jpeg import encode_doc_color_jpeg
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        encode_doc_color_jpeg(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def color_jpeg_features(media):
-    """(media_id, payload) → decoded color features: full-res RGB pixel
-    sum plus the NATIVE-resolution plane sums (y_sum at full res,
-    chroma_sum = quarter-res Cb + Cr) — the columns that prove the
-    4:2:0 chroma planes decoded exactly, not merely that luma did."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_components", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-            T.StructField("y_sum", T.LongType()),
-            T.StructField("chroma_sum", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_jpeg(bytes(payload))
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_components": d["n_components"],
-                        "pixel_sum": d["pixel_sum"],
-                        "y_sum": d["plane_sums"][0],
-                        "chroma_sum": d["plane_sums"][1]
-                        + d["plane_sums"][2],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_components",
-                    "pixel_sum", "y_sum", "chroma_sum",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)
-
-
-def jpeg_features(media):
-    """(media_id, payload) → decoded features via the real baseline
-    decoder (raster dropped after the pixel sum)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_components", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_jpeg(bytes(payload))
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_components": d["n_components"],
-                        "pixel_sum": d["pixel_sum"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_components", "pixel_sum",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)

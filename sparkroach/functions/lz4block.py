@@ -149,80 +149,3 @@ def lz4_decompress(blob: bytes, plain_len: int) -> bytes:
             f"lz4: decoded {len(out)} bytes, declared {plain_len}"
         )
     return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same mapInPandas plumbing as the other codec lanes)
-# ---------------------------------------------------------------------------
-
-
-def compress_documents(docs):
-    """(doc_id, text) → (doc_id, plain_len, payload) with real LZ4
-    blocks over the UTF-8 text bytes."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), nullable=False),
-            T.StructField("plain_len", T.IntegerType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.lz4block import lz4_compress
-
-        for pdf in batches:
-            raws = [str(t).encode("utf-8") for t in pdf["text"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "plain_len": [len(r) for r in raws],
-                    "payload": [lz4_compress(r) for r in raws],
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(_encode, schema)
-
-
-def decompress_features(comp):
-    """(doc_id, plain_len, payload) → roundtrip features: the decoded
-    byte length and the md5-derived 32-bit hash of the DECODED text —
-    one wrong copy byte breaks the hash sum downstream."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("plain_bytes", T.LongType()),
-            T.StructField("text_h32", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        import hashlib
-
-        from sparkroach.functions.lz4block import lz4_decompress
-
-        for pdf in batches:
-            rows = []
-            for did, plen, payload in zip(
-                pdf["doc_id"], pdf["plain_len"], pdf["payload"]
-            ):
-                raw = lz4_decompress(bytes(payload), int(plen))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "plain_bytes": len(raw),
-                        "text_h32": int(
-                            hashlib.md5(raw).hexdigest()[:8], 16
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "plain_bytes", "text_h32"]
-            )
-
-    return comp.mapInPandas(_decode, schema)

@@ -414,170 +414,3 @@ def encode_probe_mp4(doc_id: int) -> bytes:
     return encode_mp4_video(
         samples, p["width"], p["height"], fps=10, codec=b"avc1"
     )
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same mapInPandas plumbing as functions/avi.py)
-# ---------------------------------------------------------------------------
-
-
-def synthesize_mp4_media(docs):
-    """(doc_id) → (media_id, payload) with REAL Motion-JPEG MP4 bytes."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.mp4 import encode_doc_mp4
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        encode_doc_mp4(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def mp4_frame_features(media, stride: int = 2):
-    """(media_id, payload) → one row per sampled DECODED frame.
-
-    100 TB posture: map-only, one video per row decoded independently in
-    its Arrow batch — no shuffle; output bounded by n_frames/stride."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.jpeg import decode_jpeg
-        from sparkroach.functions.mp4 import parse_mp4
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                v = parse_mp4(bytes(payload))
-                for fi in range(0, v["n_samples"], stride):
-                    d = decode_jpeg(v["samples"][fi])
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": fi,
-                            "width": d["width"],
-                            "height": d["height"],
-                            "n_frames": v["n_samples"],
-                            "pixel_sum": d["pixel_sum"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "n_frames", "pixel_sum",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)
-
-
-def synthesize_probe_mp4(docs):
-    """(doc_id) → (media_id, payload) with 'avc1' probe MP4 bytes."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.mp4 import encode_probe_mp4
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        encode_probe_mp4(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def mp4_probe_features(media):
-    """(media_id, payload) → one METADATA row per video, decode-free:
-    codec, resolution, sample count, duration and exact sample-byte
-    accounting (stsz sums + a payload byte checksum from the sliced
-    sample ranges) — the pre-decode corpus triage pass."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("codec", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("total_sample_bytes", T.LongType()),
-            T.StructField("payload_byte_sum", T.LongType()),
-        ]
-    )
-
-    def _probe(batches):
-        from sparkroach.functions.mp4 import parse_mp4
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                v = parse_mp4(bytes(payload))
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "codec": v["codec"],
-                        "width": v["width"],
-                        "height": v["height"],
-                        "n_samples": v["n_samples"],
-                        "duration_ms": v["duration"] * 1000
-                        // v["timescale"],
-                        "total_sample_bytes": sum(
-                            len(s) for s in v["samples"]
-                        ),
-                        "payload_byte_sum": sum(
-                            sum(s) for s in v["samples"]
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "width", "height", "n_samples",
-                    "duration_ms", "total_sample_bytes", "payload_byte_sum",
-                ],
-            )
-
-    return media.mapInPandas(_probe, schema)

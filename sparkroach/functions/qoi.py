@@ -236,88 +236,3 @@ def doc_pixel(doc_id: int, p: int) -> tuple[int, int, int]:
 def doc_pixels(doc_id: int) -> tuple[int, int, list[tuple[int, int, int]]]:
     w, h = doc_image_dims(doc_id)
     return w, h, [doc_pixel(doc_id, p) for p in range(w * h)]
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same mapInPandas plumbing as functions.g711 / gif / png)
-# ---------------------------------------------------------------------------
-
-
-def synthesize_qoi_media(docs):
-    """(doc_id) → (media_id, payload) with real QOI byte streams."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.qoi import doc_pixels, qoi_encode
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                w, h, px = doc_pixels(int(i))
-                payloads.append(qoi_encode(w, h, px))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def qoi_features(media):
-    """(media_id, payload) → decoded features: dims, per-channel sums and
-    the position-weighted checksum Σ p·(r·65536 + g·256 + b) — any
-    reordering, off-by-one run or wrong delta breaks a sum."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_px", T.IntegerType()),
-            T.StructField("r_sum", T.LongType()),
-            T.StructField("g_sum", T.LongType()),
-            T.StructField("b_sum", T.LongType()),
-            T.StructField("pos_checksum", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.qoi import qoi_decode
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = qoi_decode(bytes(payload))
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "width": w,
-                        "height": h,
-                        "n_px": len(px),
-                        "r_sum": sum(r for r, _, _ in px),
-                        "g_sum": sum(g for _, g, _ in px),
-                        "b_sum": sum(b for _, _, b in px),
-                        "pos_checksum": sum(
-                            p * (r * 65536 + g * 256 + b)
-                            for p, (r, g, b) in enumerate(px)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_px",
-                    "r_sum", "g_sum", "b_sum", "pos_checksum",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)

@@ -200,79 +200,3 @@ def doc_rice_samples(doc_id: int) -> list[int]:
         -8000 + base + slope * p + (doc_id * 31 + p * 17) % 5
         for p in range(RICE_N_SAMPLES)
     ]
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same mapInPandas plumbing as the other codec lanes)
-# ---------------------------------------------------------------------------
-
-
-def synthesize_rice_media(docs):
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.rice import doc_rice_samples, rice_compress
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": [
-                        rice_compress(doc_rice_samples(int(i)))
-                        for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def rice_features(media):
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_sum", T.LongType()),
-            T.StructField("pos_checksum", T.LongType()),
-            T.StructField("compressed_lt_raw", T.BooleanType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.rice import rice_decompress
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = rice_decompress(bytes(payload))
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "n_samples": len(dec),
-                        "sample_sum": sum(dec),
-                        "pos_checksum": sum(
-                            p * v for p, v in enumerate(dec)
-                        ),
-                        "compressed_lt_raw": len(payload) < 2 * len(dec),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "sample_sum",
-                    "pos_checksum", "compressed_lt_raw",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)

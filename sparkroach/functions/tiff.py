@@ -246,79 +246,3 @@ def doc_gray(doc_id: int, p: int) -> int:
 def doc_tiff_pixels(doc_id: int) -> tuple[int, int, bytes]:
     w, h = doc_tiff_dims(doc_id)
     return w, h, bytes(doc_gray(doc_id, p) for p in range(w * h))
-
-
-# ---------------------------------------------------------------------------
-# Spark stages (same mapInPandas plumbing as the other codec lanes)
-# ---------------------------------------------------------------------------
-
-
-def synthesize_tiff_media(docs):
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), nullable=False),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _encode(batches):
-        from sparkroach.functions.tiff import doc_tiff_pixels, tiff_encode
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                w, h, px = doc_tiff_pixels(int(i))
-                payloads.append(tiff_encode(w, h, px))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return docs.select("doc_id").mapInPandas(_encode, schema)
-
-
-def tiff_features(media):
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_px", T.IntegerType()),
-            T.StructField("gray_sum", T.LongType()),
-            T.StructField("pos_checksum", T.LongType()),
-        ]
-    )
-
-    def _decode(batches):
-        from sparkroach.functions.tiff import tiff_decode
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, gray = tiff_decode(bytes(payload))
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "width": w,
-                        "height": h,
-                        "n_px": len(gray),
-                        "gray_sum": sum(gray),
-                        "pos_checksum": sum(
-                            p * g for p, g in enumerate(gray)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_px",
-                    "gray_sum", "pos_checksum",
-                ],
-            )
-
-    return media.mapInPandas(_decode, schema)

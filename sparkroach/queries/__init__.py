@@ -11,47 +11,24 @@ from __future__ import annotations
 
 from sparkroach.queries.registry import QUERIES, Query, register
 
-# importing these modules populates the registry
+# importing these modules populates the registry; import order is
+# registration order, which fixes the order of __spark_entry__.queries()
 from sparkroach.queries import relational  # noqa: E402,F401
 from sparkroach.queries import analytics  # noqa: E402,F401
 from sparkroach.queries import analytics2  # noqa: E402,F401
-from sparkroach.queries import analytics3  # noqa: E402,F401
-from sparkroach.queries import analytics4  # noqa: E402,F401
-from sparkroach.queries import analytics5  # noqa: E402,F401
-from sparkroach.queries import analytics6  # noqa: E402,F401
-from sparkroach.queries import analytics7  # noqa: E402,F401
-from sparkroach.queries import analytics8  # noqa: E402,F401
-from sparkroach.queries import analytics9  # noqa: E402,F401
 from sparkroach.queries import analytics10  # noqa: E402,F401
-from sparkroach.queries import analytics11  # noqa: E402,F401
-from sparkroach.queries import analytics12  # noqa: E402,F401
-from sparkroach.queries import analytics13  # noqa: E402,F401
-from sparkroach.queries import analytics14  # noqa: E402,F401
-from sparkroach.queries import analytics15  # noqa: E402,F401
-from sparkroach.queries import analytics16  # noqa: E402,F401
-from sparkroach.queries import analytics17  # noqa: E402,F401
-from sparkroach.queries import analytics18  # noqa: E402,F401
-from sparkroach.queries import analytics19  # noqa: E402,F401
+from sparkroach.queries import llm_ops  # noqa: E402,F401
+from sparkroach.queries import llm_ops2  # noqa: E402,F401
 from sparkroach.queries import analytics20  # noqa: E402,F401
-from sparkroach.queries import analytics21  # noqa: E402,F401
-from sparkroach.queries import analytics22  # noqa: E402,F401
-from sparkroach.queries import analytics23  # noqa: E402,F401
+from sparkroach.queries import llm_ops4  # noqa: E402,F401
 from sparkroach.queries import analytics24  # noqa: E402,F401
 from sparkroach.queries import analytics25  # noqa: E402,F401
 from sparkroach.queries import analytics26  # noqa: E402,F401
 from sparkroach.queries import analytics27  # noqa: E402,F401
 from sparkroach.queries import analytics28  # noqa: E402,F401
-from sparkroach.queries import analytics29  # noqa: E402,F401
-from sparkroach.queries import llm_ops  # noqa: E402,F401
-from sparkroach.queries import llm_ops2  # noqa: E402,F401
 from sparkroach.queries import llm_ops3  # noqa: E402,F401
-from sparkroach.queries import llm_ops4  # noqa: E402,F401
 from sparkroach.queries import llm_ops5  # noqa: E402,F401
-from sparkroach.queries import llm_ops6  # noqa: E402,F401
-from sparkroach.queries import llm_ops7  # noqa: E402,F401
 from sparkroach.queries import llm_ops8  # noqa: E402,F401
-from sparkroach.queries import llm_ops9  # noqa: E402,F401
-from sparkroach.queries import llm_ops10  # noqa: E402,F401
 from sparkroach.queries import llm_ops11  # noqa: E402,F401
 from sparkroach.queries import llm_ops12  # noqa: E402,F401
 from sparkroach.queries import llm_ops13  # noqa: E402,F401
@@ -60,17 +37,7 @@ from sparkroach.queries import llm_ops15  # noqa: E402,F401
 from sparkroach.queries import llm_ops16  # noqa: E402,F401
 from sparkroach.queries import llm_ops17  # noqa: E402,F401
 from sparkroach.queries import llm_ops18  # noqa: E402,F401
-from sparkroach.queries import llm_ops19  # noqa: E402,F401
-from sparkroach.queries import llm_ops20  # noqa: E402,F401
 from sparkroach.queries import sketches  # noqa: E402,F401
 from sparkroach.queries import chain_demo  # noqa: E402,F401
-from sparkroach.streaming import dedup as _streaming_dedup  # noqa: E402,F401
-from sparkroach.streaming import events as _streaming_events  # noqa: E402,F401
-
-# Apply the round's pinned driver-gate window (overrides per-call gated=
-# flags; see sparkroach/queries/rotation.py for the rotation design).
-from sparkroach.queries.rotation import apply_rotation as _apply_rotation  # noqa: E402
-
-_apply_rotation(QUERIES)
 
 __all__ = ["QUERIES", "Query", "register"]

@@ -42,7 +42,6 @@ def dsum(col: Column) -> Column:
 
 @register(
     "q1_pricing_summary",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle=f"""
         SELECT l_returnflag, l_linestatus,
                CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS DOUBLE) AS sum_qty,
@@ -93,7 +92,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q3_shipping_priority",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle=f"""
         SELECT l.l_orderkey,
                CAST(SUM({cents_sql("l.l_extendedprice")}
@@ -135,7 +133,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q5_region_volume",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle=f"""
         SELECT n.n_name,
                CAST(SUM({cents_sql("l.l_extendedprice")}
@@ -186,7 +183,6 @@ def q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_minute_rollup",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT date_trunc('hour', ts) AS hour_bucket,
                event_type,
@@ -219,7 +215,6 @@ def events_minute_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_top_per_user",
-    gated=False,  # near-duplicate shape; local-oracle-swept, driver slot yielded
     oracle="""
         SELECT user_id, event_id, CAST(value AS DOUBLE) AS value, rn
         FROM (
@@ -250,8 +245,7 @@ def events_top_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shared by the batch twin below and the genuinely-streaming gate query
-# streaming.events.events_sessions_streamed — both must hash-match this SQL
+# oracle of the events_user_sessions batch sessionizer below
 SESSIONS_ORACLE = """
         WITH us AS (
             SELECT user_id, event_id, epoch_us(ts::TIMESTAMP) AS t_us FROM events
@@ -287,7 +281,6 @@ SESSIONS_ORACLE = """
     oracle=SESSIONS_ORACLE,
     survey_ref="§2C streaming state (sessionization — applyInPandasWithState analog, batch twin)",
     description="gap-based sessionization via lag window — batch twin of stateful streaming",
-    gated=False,  # rotated out r4: driver-recorded green in r1-r3, oracle unchanged
 )
 def events_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # microsecond-exact gap detection (matches the oracle's epoch_us)

@@ -18,8 +18,7 @@ non-parquet source formats, and a key-skew planning report.
 
 Reference parity note: the reference's query surface is SQL over
 CockroachDB (one format); source-format breadth is part of the
-beyond-reference Spark surface.  All gated=False (driver window full
-this round); r5 rotation candidates.
+beyond-reference Spark surface.
 """
 
 from __future__ import annotations
@@ -64,7 +63,6 @@ N_TILES = 4
     "stream — at 100 TB the global sort input is the user dimension; if "
     "even that is too large, rank within hash ranges and merge offsets "
     "(the distributed top-k generalization)",
-    gated=False,  # r5 rotation candidate (driver window full this round)
 )
 def events_user_value_ntiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -136,7 +134,6 @@ _TH32_SQL = " + ".join(
     "checksums from parquet, so quoting, escaping, null handling or "
     "type drift in either format pipeline fails the hash match.  "
     "Temp-dir ephemeral, like the streaming gates",
-    gated=False,  # r5 rotation candidate (driver window full this round)
 )
 def documents_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -189,7 +186,6 @@ def documents_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "documents_xml_roundtrip",
-    gated=False,  # r6 rotation candidate (window frozen this round)
     oracle=f"""
         WITH md AS (SELECT doc_id, n_chars, lang, md5(text) AS m
                     FROM documents)
@@ -288,7 +284,6 @@ SKEW_TOP = 10
     "and the 1-row global joins by broadcast.  This is the "
     "operator you run before enabling the salted-aggregation recipe "
     "(events_salted_type_counts) or AQE skew-join on a new key",
-    gated=False,  # r5 rotation candidate (driver window full this round)
 )
 def suppkey_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")

@@ -15,7 +15,6 @@ from sparkroach.tables import load
 
 @register(
     "q6_forecast_revenue",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle=f"""
         SELECT CAST(SUM({cents_sql("l_extendedprice")}
                         * {cents_sql("l_discount")}) AS DOUBLE) / 10000.0
@@ -50,7 +49,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "account_no_resources_antijoin",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT c_custkey, c_name
         FROM customer c
@@ -76,7 +74,6 @@ def account_no_resources_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "brand_type_set_ops",
-    gated=False,  # near-duplicate shape; local-oracle-swept, driver slot yielded
     oracle="""
         SELECT p_brand FROM part WHERE p_type = 'ECONOMY'
         INTERSECT
@@ -95,7 +92,6 @@ def brand_type_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "part_brand_multiset_ops",
-    gated=False,  # r6 rotation candidate (window frozen this round)
     oracle="""
         SELECT 'intersect_all' AS op, p_brand FROM (
             SELECT p_brand FROM part WHERE p_type = 'ECONOMY'
@@ -136,7 +132,6 @@ def part_brand_multiset_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_rollup_cube",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT event_type,
                CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_bucket,
@@ -164,7 +159,6 @@ def events_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_distinct_users",
-    gated=False,  # near-duplicate shape; local-oracle-swept, driver slot yielded
     oracle="""
         SELECT event_type,
                count(DISTINCT user_id) AS n_users,
@@ -191,7 +185,6 @@ def events_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_asof_last_purchase",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle="""
         WITH errors AS (
             SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'

@@ -18,16 +18,14 @@ sorted-neighborhood dedup blocking.
   unspecified).
 
 - ``dup_graph_recursive_cte``: Spark 4's engine-native ``WITH
-  RECURSIVE`` driving the same BFS the driver-loop operator
-  (``dup_graph_bfs_layers``, llm_ops6) computes: shortest-hop distance
-  from cluster-root docs through verified near-dup edges.  Spark's
-  recursion currently supports only UNION ALL (no per-step frontier
-  dedup), so revisits re-expand until the depth guard stops them —
-  fine on near-dup graphs whose components are small (ours are), while
-  the anti-join driver loop remains the shape for high-degree graphs
-  at 100 TB; this gate's job is to exercise the UnionLoop execution
-  path and pin it equal to the driver-loop twin (test-pinned) and to
-  the DuckDB recursive-CTE oracle.
+  RECURSIVE`` computing a BFS over the verified near-dup graph:
+  shortest-hop distance from cluster-root docs through verified near-dup
+  edges.  Spark's recursion currently supports only UNION ALL (no
+  per-step frontier dedup), so revisits re-expand until the depth guard
+  stops them — fine on near-dup graphs whose components are small (ours
+  are), while an anti-join driver loop is the shape for high-degree
+  graphs at 100 TB; this gate's job is to exercise the UnionLoop
+  execution path and pin it to the DuckDB recursive-CTE oracle.
 
 - ``events_user_trend_grouped_map``: per-user OLS trend slope of
   event value (in exact integer cents) against the per-user event
@@ -47,9 +45,6 @@ sorted-neighborhood dedup blocking.
   block order, verified with exact distinct-word Jaccard.  Windowed
   lead() per block key: no self-join, candidate count ≤
   (w−1)·n by construction at any corpus size.
-
-All gated=False on registration (window full): r5/r6 rotation
-candidates, swept by the local oracle gate at sf0.001/0.01/0.1.
 """
 
 from __future__ import annotations
@@ -58,10 +53,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparkroach.queries.llm_ops6 import (
-    BFS_MAX_DEPTH,
-    _bfs_oracle,
-    _dup_edges_and_seeds,
+from sparkroach.queries.llm_ops import (
+    _JACCARD_TAU,
+    _lsh_candidates_cte,
+    _verified_pairs,
 )
 from sparkroach.queries.registry import register
 from sparkroach.tables import load
@@ -73,7 +68,6 @@ from sparkroach.tables import load
 
 @register(
     "events_click_purchase_asof",
-    gated=False,
     bench=True,  # flagship wave-10 operator: the scalable merge-asof plan
     oracle="""
         WITH p0 AS (SELECT user_id, epoch_us(ts::TIMESTAMP) AS p_us, value,
@@ -164,21 +158,74 @@ def events_click_purchase_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engine-native recursive CTE: BFS over the verified near-dup graph
 # ---------------------------------------------------------------------------
 
+BFS_MAX_DEPTH = 4
+
+# integer cross-multiplied Jaccard threshold (inter*10 >= 8*union is
+# exactly jaccard >= 0.8 — no float literal crosses the engine boundary)
+_TAU_NUM = int(_JACCARD_TAU * 10)
+
+
+def _dup_edges_and_seeds(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Undirected verified-pair edges + root seeds (docs never appearing
+    as doc_b in a verified pair: no smaller-id dup dominates them)."""
+    ver = (
+        _verified_pairs(d)
+        .where(F.col("inter") * 10 >= _TAU_NUM * F.col("uni"))
+        .select("doc_a", "doc_b")
+        .localCheckpoint(eager=True)
+    )
+    fwd = ver.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    rev = ver.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    edges = fwd.unionByName(rev)
+    nodes = edges.select(F.col("u").alias("node")).distinct()
+    dominated = ver.select(F.col("doc_b").alias("node")).distinct()
+    seeds = nodes.join(dominated, "node", "left_anti")
+    return edges, seeds
+
+
+def _bfs_oracle() -> str:
+    # WITH RECURSIVE prefixes the whole CTE list; the non-recursive
+    # signature/band/candidate chain rides along unchanged
+    cte = _lsh_candidates_cte().replace("WITH w AS", "WITH RECURSIVE w AS", 1)
+    return f"""
+        {cte},
+        ver AS MATERIALIZED (
+            SELECT c.doc_a, c.doc_b
+            FROM cand c JOIN shing sa ON sa.doc_id = c.doc_a
+                        JOIN shing sb ON sb.doc_id = c.doc_b
+            WHERE len(list_filter(sa.shingles, x -> list_contains(sb.shingles, x))) * 10
+                  >= {_TAU_NUM} * (len(sa.shingles) + len(sb.shingles)
+                      - len(list_filter(sa.shingles, x -> list_contains(sb.shingles, x))))
+        ),
+        und AS (SELECT doc_a AS u, doc_b AS v FROM ver
+                UNION ALL SELECT doc_b, doc_a FROM ver),
+        seeds AS (SELECT DISTINCT u AS node FROM und
+                  WHERE u NOT IN (SELECT doc_b FROM ver)),
+        walk(node, dist) AS (
+            SELECT node, 0 FROM seeds
+            UNION
+            SELECT und.v, walk.dist + 1
+            FROM walk JOIN und ON und.u = walk.node
+            WHERE walk.dist < {BFS_MAX_DEPTH}
+        )
+        SELECT node, CAST(MIN(dist) AS BIGINT) AS dist
+        FROM walk GROUP BY node ORDER BY node
+    """
+
 
 @register(
     "dup_graph_recursive_cte",
-    gated=False,
     oracle=_bfs_oracle(),
     survey_ref="§2C SQL surface — WITH RECURSIVE (Spark 4 engine-native "
-    "recursion, UnionLoop execution): same BFS semantics as the "
-    "driver-loop dup_graph_bfs_layers, equality test-pinned",
+    "recursion, UnionLoop execution): BFS over the verified near-dup "
+    "graph",
     description=f"shortest-hop distance (<= {BFS_MAX_DEPTH}) from "
     "cluster-root docs through verified near-dup edges, computed by "
     "Spark's native WITH RECURSIVE instead of a driver loop. Spark "
     "recursion is UNION ALL-only (no per-step frontier dedup), so the "
     "depth guard bounds revisits and the final GROUP BY MIN collapses "
-    "them — exact on small-component dup graphs; the anti-join driver "
-    "loop remains the high-degree-graph shape",
+    "them — exact on small-component dup graphs; an anti-join driver "
+    "loop is the high-degree-graph shape",
 )
 def dup_graph_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -229,7 +276,6 @@ def _ols_group(pdf: pd.DataFrame) -> pd.DataFrame:
 
 @register(
     "events_user_trend_grouped_map",
-    gated=False,
     oracle="""
         WITH e AS (SELECT user_id,
                           CAST(floor(value * 100) AS BIGINT) AS y,
@@ -288,7 +334,6 @@ SNM_WINDOW = 3  # each doc pairs with its next (SNM_WINDOW - 1) neighbors
 
 @register(
     "docs_sorted_neighborhood_pairs",
-    gated=False,
     oracle=f"""
         WITH k AS (SELECT doc_id, text,
                           substring(text, 1, {SNM_PREFIX}) AS block

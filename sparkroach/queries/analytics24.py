@@ -467,12 +467,6 @@ N_PDF_FILES = 8
 
 @register(
     "documents_pdf_text_ingest",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # documents_warc_ingest (identical lane shape: applyInPandas shard
-    # build → binfiles sink → binaryFile → mapInPandas strict parse →
-    # checksum aggregate); the PDF codec itself is pinned by
-    # tests/test_pdf.py (hypothesis roundtrips + strict-failure matrix).
-    gated=False,
     oracle=f"""
         WITH w AS (
             SELECT doc_id, md5(text) AS tm, strlen(text) AS clen,

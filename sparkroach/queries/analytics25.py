@@ -87,14 +87,6 @@ def _exclusive_prefix_max(df: DataFrame, key: str, val: str) -> DataFrame:
 
 @register(
     "part_pareto_frontier",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # sessions_concurrency_peak (the recorded distributed-prefix plan
-    # family — range partition + local window + broadcast offsets);
-    # the frontier semantics are unit-pinned against a brute-force
-    # domination check in tests/test_analytics25.py.
-    gated=False,
-    # The oracle states the DEFINITION (no q dominates p), not the
-    # prefix-scan plan — an independent formulation on purpose.
     oracle="""
         WITH pts AS (
             SELECT p_partkey, p_retailprice AS price,
@@ -217,12 +209,6 @@ _LINK_ORACLE = f"""
 
 @register(
     "customer_record_linkage",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # docs_sorted_neighborhood_pairs (blocked candidate-pair generation
-    # + per-pair scalar scoring + grouped census — the recorded
-    # bounded-pair plan family); band/threshold behavior is unit-pinned
-    # on controlled record pairs in tests/test_analytics25.py.
-    gated=False,
     oracle=_LINK_ORACLE,
     survey_ref="LLM ops: entity resolution — Fellegi–Sunter record "
     "linkage with blocking (integer agreement weights, match/possible/"

@@ -74,12 +74,6 @@ _ARROW_ORACLE = f"""
 
 @register(
     "arrow_ipc_roundtrip",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # documents_avro_roundtrip (write-format → read-format → checksum
-    # lane through the same DataSource extension point and two-phase
-    # commit; the Arrow-batch passthrough is the increment, pinned by
-    # tests/test_arrow_ipc.py including the abort-leaves-nothing case).
-    gated=False,
     oracle=_ARROW_ORACLE,
     survey_ref="source formats: Arrow IPC files (Feather V2) — the "
     "dataset-library cache format as a real read/write surface with "
@@ -178,12 +172,6 @@ _SQLITE_ORACLE = f"""
 
 @register(
     "documents_sqlite_ingest",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # documents_warc_ingest (identical lane shape, in the R7 window:
-    # applyInPandas shard build → binfiles sink → binaryFile → strict
-    # mapInPandas parse → checksum aggregate); the sqlite codec's
-    # strict-failure behavior is pinned in tests/test_sqlite_lane.py.
-    gated=False,
     oracle=_SQLITE_ORACLE,
     survey_ref="source formats: SQLite database shards — stdlib-sqlite3 "
     "codec through the generic binary-file sink and file-parallel "
@@ -306,12 +294,6 @@ _COMPACT_ORACLE = f"""
 
 @register(
     "events_small_file_compaction",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # documents_shard_export (controlled-fan-out file write + re-read
-    # verification lane, r6 gate); the compaction invariants (row/value
-    # preservation, exact file counts from a real directory listing)
-    # are what the oracle pins.
-    gated=False,
     oracle=_COMPACT_ORACLE,
     survey_ref="§2D physical layout — small-file compaction (the "
     "lakehouse maintenance pass): rewrite a fragmented table region "

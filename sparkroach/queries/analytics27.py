@@ -88,12 +88,6 @@ _BENFORD_ORACLE = f"""
 
 @register(
     "orders_benford_audit",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # orders_lineitem_dq_audit (grouped-count DQ census with constant
-    # expectation rows, r6 gate); the integer digit extraction and the
-    # literal-constant expectations are pinned in
-    # tests/test_analytics27.py.
-    gated=False,
     oracle=_BENFORD_ORACLE,
     survey_ref="§2C analytic breadth / DQ — Benford's-law first-digit "
     "audit over a monetary column (the synthetic-data / fraud screen), "
@@ -202,12 +196,6 @@ def _corr_oracle() -> str:
 
 @register(
     "lineitem_corr_matrix",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # orders_profile_report (single-pass multi-aggregate profiling
-    # census, promoted to the R7 window); the fixed-shape double
-    # arithmetic over exact integer statistics is pinned in
-    # tests/test_analytics27.py against numpy.
-    gated=False,
     oracle=_corr_oracle(),
     survey_ref="§2C analytic breadth / profiling — Pearson correlation "
     "matrix via one-pass exact sufficient statistics (integer-cents "
@@ -370,12 +358,6 @@ def _running_scan(df, spark, n_parts: int):
 
 @register(
     "events_cusum_drift",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # sessions_concurrency_peak (the recorded distributed-prefix plan
-    # family, in the R7 window — here run twice: running sum then
-    # running min over one pinned ordering); the max-plus identity and
-    # planted-shift detection are pinned in tests/test_analytics27.py.
-    gated=False,
     oracle=_CUSUM_ORACLE,
     survey_ref="§2C drift detection — one-sided CUSUM change-point "
     "statistic over the event stream (sequential detection, completing "

@@ -71,7 +71,6 @@ _FUNNEL_ORACLE = f"""
 @register(
     "events_ordered_funnel_maxgap",
     # r8-new: pinned into the R8 window (rotation.R8_NEW)
-    gated=False,
     oracle=_FUNNEL_ORACLE,
     survey_ref="§2C sequence analytics — chained ordered funnel with a "
     "max gap between CONSECUTIVE steps (ClickHouse windowFunnel strict-"
@@ -148,7 +147,6 @@ _SHIFT = 100_000  # acctbal >= -999.99 → cents >= -99999; shift keeps DIV/≫0
 @register(
     "customer_l_diversity_report",
     # r8-new: pinned into the R8 window (rotation.R8_NEW)
-    gated=False,
     oracle=f"""
         SELECT c_nationkey AS nationkey, c_mktsegment AS mktsegment,
                CAST(COUNT(*) AS BIGINT) AS group_size,
@@ -262,7 +260,6 @@ def _triangles_oracle() -> str:
 @register(
     "dup_graph_triangles",
     # r8-new: pinned into the R8 window (rotation.R8_NEW)
-    gated=False,
     oracle=_triangles_oracle(),
     survey_ref="§2C graph statistics — exact triangle count + global "
     "transitivity over the near-dup graph (the density diagnostic that "
@@ -351,6 +348,18 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
 # bootstrap_mean_ci — deterministic Poisson bootstrap
 # ---------------------------------------------------------------------------
 
+_HEX = "0123456789abcdef"
+
+
+def _th32_sql(col: str) -> str:
+    """DuckDB twin of ``conv(substring(md5(x), 1, 8), 16, 10)``: the
+    top 32 bits of an md5 hex digest as an integer."""
+    return " + ".join(
+        f"(instr('{_HEX}', substring({col}, {k + 1}, 1)) - 1) * {16 ** (7 - k)}"
+        for k in range(8)
+    )
+
+
 _B = 32  # resamples
 # Poisson(1) inverse-CDF thresholds × 10^6 (literal constants — both
 # engines compare the same hashed integer against the same literals;
@@ -368,8 +377,6 @@ def _w_sql(u: str) -> str:
 
 
 def _bootstrap_oracle() -> str:
-    from sparkroach.queries.llm_ops10 import _th32_sql
-
     h = _th32_sql(
         "md5(CAST(doc_id AS VARCHAR) || ':' || CAST(b AS VARCHAR))"
     )
@@ -408,7 +415,6 @@ def _bootstrap_oracle() -> str:
 @register(
     "bootstrap_mean_ci",
     # r8-new: pinned into the R8 window (rotation.R8_NEW)
-    gated=False,
     oracle=_bootstrap_oracle(),
     survey_ref="§2C resampling inference — Poisson-bootstrap confidence "
     "interval for a per-source mean (the single-pass bootstrap of "
@@ -504,16 +510,10 @@ _ZONE_ORACLE = f"""
 
 @register(
     "events_zone_map_report",
-    # R9-window candidate: registered gated=False, DELEGATED to
-    # documents_shard_export (controlled file write + re-read
-    # verification lane, r6 gate); the zone-map semantics — per-file
-    # min/max equals what a footer-stats reader would prune on — is
-    # what the oracle pins from the same files.
     # NOTE (run order): the oracle reads ZONE_DIR, which THIS function
     # writes — the compare harnesses all run the Spark side first
     # (oracle.compare, driver sim, the driver itself).  If a future
     # harness evaluates oracles standalone, run the gate once first.
-    gated=False,
     oracle=_ZONE_ORACLE,
     survey_ref="§2D physical layout — zone-map / data-skipping report: "
     "per-file min/max statistics of a sort key plus which files a "

@@ -20,8 +20,6 @@ Scale design notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -112,7 +110,6 @@ def _minhash_sig_sql(i: int) -> str:
 
 @register(
     "dedup_exact",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle="""
         SELECT count(*) AS n_docs,
                count(DISTINCT md5(text)) AS n_distinct,
@@ -134,7 +131,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_fingerprint",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT doc_id,
                md5(array_to_string(list_sort(string_split(text, ' ')), ' ')) AS fp
@@ -183,7 +179,6 @@ ROLL_P = (1 << 31) - 1
     f"folded as acc·{ROLL_B}+h mod {ROLL_P} — one aggregate() fold per doc, "
     "map-side only, no shuffle; catches byte-identical sequences where the "
     "sorted-token fingerprint collides reordered docs",
-    gated=False,  # rotated out r4: driver-recorded green in r1-r3, oracle unchanged
 )
 def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -253,10 +248,7 @@ LSH_BUCKET_REPS = 16
 # Driver-transfer bound for the flooded-bucket key list (r8 verdict
 # What's-wrong #3): capped_band_pairs collects at most this many over-cap
 # keys (limit(max+1)); past it the routing joins stay distributed.
-# Env-tunable for deployments with a different driver memory budget.
-_OVER_COLLECT_MAX = int(
-    os.environ.get("SPARKROACH_LSH_OVER_COLLECT_MAX", "100000")
-)
+_OVER_COLLECT_MAX = 100_000
 
 
 def _capped_cand_sql(
@@ -355,7 +347,6 @@ def _lsh_oracle() -> str:
 
 @register(
     "minhash_lsh_candidates",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle=_lsh_oracle(),
     bench=True,  # r02: heavy LLM op in the headline set (VERDICT #8)
     survey_ref="LLM ops: MinHash+LSH near-dup candidates (shingle→minhash→band→bucket-join)",
@@ -974,7 +965,6 @@ def _simhash_oracle() -> str:
 
 @register(
     "simhash_docs",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle=_simhash_oracle(),
     bench=True,  # r02: heavy LLM op in the headline set (VERDICT #8)
     survey_ref="LLM ops: SimHash document signatures",
@@ -1016,7 +1006,6 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_quality",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle="""
         SELECT doc_id,
                length(text) AS n_chars_actual,
@@ -1048,7 +1037,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_count_by_source",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT source,
                count(*) AS n_docs,
@@ -1087,7 +1075,6 @@ _BPE_PAT = "[a-z]+|[0-9]+|[^a-z0-9 ]"
     "token_count_bpe_regex",
     # r03: gated slot handed to dedup_cc_clusters — token-count coverage is
     # already carried by token_count_by_source; still swept locally.
-    gated=False,
     oracle=f"""
         SELECT doc_id,
                len(regexp_extract_all(text, '{_BPE_PAT}')) AS n_bpe_tokens,
@@ -1130,7 +1117,6 @@ def token_count_bpe_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     "length budgeting query (context-window fit, padding waste). Exact "
     "percentile here (per-group sort); at 100 TB swap to approx_percentile "
     "— same plan shape, bounded-memory sketch",
-    gated=False,  # rotated out r4: driver-recorded green in r1-r3, oracle unchanged
 )
 def token_quantiles_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -1187,7 +1173,6 @@ def _lang_id_oracle() -> str:
 
 @register(
     "lang_id_stopwords",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle=_lang_id_oracle(),
     survey_ref="LLM ops: language identification (stopword-profile heuristic)",
     description="stopword-lexicon language ID: tokenize → broadcast-join tiny "
@@ -1242,7 +1227,6 @@ _STOPWORDS = sorted({w for _, w in _LEXICON})
     "+ the standard keep/drop gate (ratio ≥ 2%, sane token count). The "
     "lexicon is a literal array in the row expression — no join, no "
     "shuffle, pure map-side scan at any scale",
-    gated=False,  # rotated out r4: driver-recorded green in r1-r3, oracle unchanged
 )
 def text_stopword_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -1279,7 +1263,6 @@ N_QUERIES = 8
 
 @register(
     "ann_cosine_topk",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle=f"""
         WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings
                    WHERE vec_id < {N_QUERIES}),
@@ -1361,7 +1344,6 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "precomputed `label` partition) before scoring — the equi-join on "
     "cluster id replaces the cross join; at scale the corpus is "
     "partitioned by cluster so the probe is a partition-pruned scan",
-    gated=False,  # rotated out r4: driver-recorded green in r1-r3, oracle unchanged
 )
 def ann_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
@@ -1498,7 +1480,6 @@ def _ivf_kmeans_oracle(select: str = "topk") -> str:
     "reassign, then probe only the query's cluster for top-k. At 100 TB "
     "assignment is one broadcast-join pass per Lloyd iteration and the "
     "final table is cluster-partitioned so probes are partition-pruned",
-    gated=False,  # rotated out r4: driver-recorded green in r1-r3, oracle unchanged
 )
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_kmeans_parts(spark, sf_dir)[1]
@@ -1634,7 +1615,6 @@ def _hyperplane_oracle() -> str:
     "16 dot products against literal planes, sign bits packed into a "
     "bucket id. Map-side only; at scale the corpus is stored bucketed so "
     "probes touch one bucket per plane-table",
-    gated=False,  # rotated out r4: driver-recorded green in r1-r3, oracle unchanged
 )
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
@@ -2070,7 +2050,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mapInPandas feature-extraction stage, roll up per kind. The decode "
     "step is a deterministic stub (no codec libs here); schema, Arrow "
     "batching and partitioning are the real 100 TB plumbing",
-    gated=False,  # rotated out r4: driver-recorded green in r1-r3, oracle unchanged
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkroach.functions import multimodal as mm
@@ -2129,7 +2108,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wins whenever the feature is a pure byte statistic; the decode "
     "lane (real codecs) stays mapInPandas where per-item parsing is "
     "unavoidable",
-    gated=False,  # r6 rotation candidate (window frozen this round)
 )
 def multimodal_features_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkroach.functions import multimodal as mm
@@ -2249,7 +2227,6 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="LLM ops: embedding-column vector stats",
     description="per-cluster vector census: L2 norms computed JVM-side via "
     "aggregate(transform(...)), decimal-summed for order-insensitivity",
-    gated=False,  # rotated out r4: driver-recorded green in r1-r3, oracle unchanged
 )
 def embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")

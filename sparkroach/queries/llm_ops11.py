@@ -77,9 +77,6 @@ def _rules_sql(st: str, hosts_src: str) -> str:
 
 @register(
     "robots_disallow_filter",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # dedup_keep_best (window argmax over a bounded candidate join)
-    gated=False,
     oracle=f"""
         WITH frontier AS (
             SELECT doc_id, {_frontier_sql("VARCHAR")} FROM documents
@@ -215,9 +212,6 @@ def _pi_oracle() -> str:
 
 @register(
     "embedding_power_iteration_pc1",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # pagerank_dup_graph (fixed-iteration aggregate loop, r4 gate)
-    gated=False,
     oracle=_pi_oracle(),
     survey_ref="LLM ops: distributed power iteration — top principal "
     "direction of the embedding Gram matrix via two grouped aggregations "

@@ -77,11 +77,6 @@ CUT_SPAN_WORDS = 16
 
 @register(
     "dup_span_cut_list",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # dup_span_coverage (r5-recorded; same window/cover stages) — the
-    # islands step is the increment and is unit-pinned on a controlled
-    # corpus in tests/test_llm_ops12.py.
-    gated=False,
     oracle=f"""
         WITH w AS (
             SELECT doc_id, string_split(text, ' ') AS ws FROM documents
@@ -207,10 +202,6 @@ _PHRASE_TOP = 5
 
 @register(
     "phrase_query_positions",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # bm25_top_docs (r6-recorded posting-list retrieval; positions
-    # replace term frequencies, adjacency join replaces the score agg)
-    gated=False,
     oracle=f"""
         WITH pos AS (
             SELECT doc_id, CAST(i - 1 AS BIGINT) AS p, w
@@ -299,11 +290,6 @@ _BC_Q = 10**9  # per-item ratio quantizer (exact integer division)
 
 @register(
     "dedup_cluster_bcubed",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # docs_grouping_sets (r5-recorded multi-key grouped-count plan
-    # family); the B-cubed arithmetic is unit-pinned against a
-    # hand-computed contingency in tests/test_llm_ops12.py.
-    gated=False,
     oracle=f"""
         WITH labeled AS (
             SELECT doc_id,
@@ -412,11 +398,6 @@ _DSIR_KEEP_NUM, _DSIR_KEEP_DEN = 5, 4
 
 @register(
     "dsir_importance_weights",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # lm_bigram_coverage_score (r7-window train/score-split n-gram plan
-    # family; the increment — hashed buckets + integer ratio weights —
-    # is unit-pinned in tests/test_llm_ops12.py).
-    gated=False,
     oracle=f"""
         WITH toks AS (
             SELECT doc_id, string_split(text, ' ') AS ws FROM documents
@@ -555,10 +536,6 @@ _RDV_SHARDS = 16
 
 @register(
     "shard_rendezvous_assign",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # dedup_keep_best (r5-recorded window-argmax plan family over a
-    # bounded generated candidate set).
-    gated=False,
     oracle=f"""
         WITH cand AS (
             SELECT d.doc_id, s.s,

@@ -56,11 +56,6 @@ _K_LEN_KEEP = 56  # words; the corpus median → a balanced second rater
 
 @register(
     "quality_rater_kappa",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # dedup_cluster_bcubed's twin docs_grouping_sets (multi-key grouped
-    # counts + integer-quantized ratio); kappa's sign/identity behavior
-    # is unit-pinned on controlled raters in tests/test_llm_ops13.py.
-    gated=False,
     oracle=f"""
         WITH toks AS (
             SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -166,11 +161,6 @@ _APPORTION_BUDGET = 1000
 
 @register(
     "source_budget_apportion",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # dedup_keep_best (grouped counts + one window rank over a
-    # source-cardinality-bounded table); Σ quota == budget is
-    # unit-pinned for adversarial remainders.
-    gated=False,
     oracle=f"""
         WITH c AS (
             SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source
@@ -250,12 +240,6 @@ def source_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tokenizer_fertility_report",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # token_count_by_source's plan family via lang_id_confusion's twin
-    # temperature_mix_weights — per-key grouped integer sums + final
-    # divisions; the piece regex is the one the recorded
-    # token_count_bpe_regex oracle already proves cross-engine.
-    gated=False,
     oracle=f"""
         SELECT lang,
                CAST(COUNT(*) AS BIGINT) AS n_docs,

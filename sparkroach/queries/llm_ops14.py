@@ -120,12 +120,6 @@ def _mmr_oracle() -> str:
 
 @register(
     "mmr_diversified_topk",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # ann_cosine_topk (broadcast-query scored scan + TakeOrderedAndProject
-    # — the recorded exact-ANN plan family); the greedy step's
-    # redundancy-suppression behavior is unit-pinned on a planted
-    # near-duplicate pool in tests/test_llm_ops14.py.
-    gated=False,
     oracle=_mmr_oracle(),
     survey_ref="LLM ops: diversified retrieval — Maximal Marginal "
     "Relevance top-k over the embedding corpus (greedy λ·rel − "
@@ -228,12 +222,6 @@ def _sub_oracle() -> str:
 
 @register(
     "substring_denylist_scan",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # denylist_scrub_report (broadcast-lexicon map-only scan + census —
-    # the recorded policy-scan plan family; the increment is the
-    # substring occurrence identity, unit-pinned on literal strings in
-    # tests/test_llm_ops14.py).
-    gated=False,
     oracle=_sub_oracle(),
     survey_ref="LLM ops: substring-level multi-pattern policy scan — "
     "occurrence counts for non-token-aligned denylist fragments via the "
@@ -336,7 +324,6 @@ def _shuffle_oracle() -> str:
     # hashing, map-only — r1-recorded); the injectivity-proving census
     # is unit-pinned over a full dense id domain in
     # tests/test_llm_ops14.py.
-    gated=False,
     oracle=_shuffle_oracle(),
     survey_ref="LLM ops: deterministic epoch shuffle — seeded Feistel "
     "bijection doc_id → position; coordination-free corpus reshuffling "

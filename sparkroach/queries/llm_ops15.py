@@ -79,11 +79,6 @@ def _repair_mojibake(s: str) -> tuple[str, bool]:
 
 @register(
     "mojibake_repair_report",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # text_nfc_normalize_report (inject-transform-verify lane through an
-    # arrow-optimized stdlib-codec UDF, in the R7 window); the repair
-    # heuristic's decision table is unit-pinned in tests/test_llm_ops15.py.
-    gated=False,
     oracle=f"""
         WITH x AS (
             SELECT doc_id,
@@ -211,11 +206,6 @@ def _script_oracle() -> str:
 
 @register(
     "script_mix_report",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # pii_scrub_report (deterministic injection + RE2-portable regex
-    # detection census, in the R7 window); range semantics pinned on
-    # literal strings in tests/test_llm_ops15.py.
-    gated=False,
     oracle=_script_oracle(),
     survey_ref="LLM ops: Unicode-script composition — per-script char "
     "and document counts plus mixed-script detection (the wrong-script "

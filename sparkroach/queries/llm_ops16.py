@@ -123,12 +123,6 @@ def _bpe_apply_oracle() -> str:
 
 @register(
     "bpe_encode_apply",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # bpe_second_merge (the recorded iterate-and-apply BPE plan family,
-    # r6 gate); the increment — boundary-safe multi-merge application —
-    # is unit-pinned on adversarial symbol sequences in
-    # tests/test_llm_ops16.py.
-    gated=False,
     oracle=_bpe_apply_oracle(),
     survey_ref="LLM ops: BPE tokenizer ENCODE — learn the first K merges "
     "by true iterative BPE and apply the merge table to the corpus "

@@ -102,12 +102,6 @@ def _gz_oracle() -> str:
 
 @register(
     "multimodal_goertzel_tone",
-    # R8-window candidate: registered gated=False, DELEGATED to
-    # multimodal_decode (real-codec Arrow decode lane mirrored by a
-    # doc_id-arithmetic oracle, r4 gate); the quantized recurrence's
-    # cross-engine agreement and the closed-form-vs-real-decode sample
-    # equivalence are pinned in tests/test_llm_ops17.py.
-    gated=False,
     oracle=_gz_oracle(),
     survey_ref="multimodal: audio signal processing — integer Goertzel "
     "single-bin tone probes over real-decoded PCM (the DTMF/pilot-tone "

@@ -61,7 +61,6 @@ def _png_oracle() -> str:
 @register(
     "multimodal_png_decode",
     # r8-new: pinned into the R8 window (rotation.R8_NEW)
-    gated=False,
     oracle=_png_oracle(),
     survey_ref="LLM ops: multimodal decode — from-scratch PNG codec "
     "(zlib DEFLATE + CRC-32 chunks + ALL FIVE filter reconstructions "
@@ -147,7 +146,6 @@ _RRF_ORACLE = f"""
     # r8-new: pinned into the R8 window (rotation.R8_NEW).  The bounded
     # rank windows sit ABOVE .limit(RRF_DEPTH) — whitelisted in
     # tests/test_plans.py _GLOBAL_WINDOW_OK.
-    gated=False,
     oracle=_RRF_ORACLE,
     survey_ref="LLM ops: hybrid retrieval — reciprocal rank fusion "
     "(Cormack et al., the standard way modern search fuses lexical and "
@@ -276,7 +274,6 @@ def _margin_oracle() -> str:
 @register(
     "bitext_margin_pairs",
     # r8-new: pinned into the R8 window (rotation.R8_NEW)
-    gated=False,
     oracle=_margin_oracle(),
     survey_ref="LLM ops: margin-based embedding pair mining (the "
     "Artetxe–Schwenk ratio-margin criterion bitext/LASER mining uses: "
@@ -396,7 +393,6 @@ _NDCG_ORACLE = f"""
     # r8-new: pinned into the R8 window (rotation.R8_NEW).  The rank
     # windows sit above .limit(NDCG_AT) — whitelisted in
     # tests/test_plans.py _GLOBAL_WINDOW_OK.
-    gated=False,
     oracle=_NDCG_ORACLE,
     survey_ref="LLM ops: retrieval-quality evaluation — nDCG@10 of a "
     "ranking against graded relevance labels (the metric every search/"

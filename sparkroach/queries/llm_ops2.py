@@ -30,10 +30,6 @@ Reference parity note: the reference (algorand/conduit-cockroachdb) has no
 LLM plane; this module is part of the beyond-reference surface the build
 brief requires (training-data pipeline operators as first-class
 components).
-
-Registered gated=False — the driver's 50-entry window is full this round —
-but every oracle runs in the local sweep (tests/test_oracle_gate.py,
-`python -m sparkroach.oracle`); r5 rotation candidates.
 """
 
 from __future__ import annotations
@@ -45,6 +41,43 @@ from sparkroach.queries.registry import register
 from sparkroach.tables import load
 
 PASSAGE_WORDS = 16  # word n-gram window for passage-level dedup
+
+
+def global_row_number(df: DataFrame, order_cols, out: str = "rank") -> DataFrame:
+    """Append a globally-ordered ``row_number()`` in ``order_cols`` order
+    WITHOUT a single-partition window (a distributed prefix sum over
+    per-partition row COUNTS): range-partition on the ordering
+    expressions, a per-partition local row_number, then broadcast
+    exclusive-prefix offsets — one bookkeeping row per partition through
+    the driver.  ``order_cols`` are
+    Column expressions and may carry ``.desc()``; the total order must be
+    unique for the result to be deterministic (callers order by a key
+    suffix).  Relies on repartitionByRange's contract that ascending
+    partition ids hold ascending ranges of the sort expressions."""
+    spark = df.sparkSession
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    part = (
+        df.repartitionByRange(n_parts, *order_cols)
+        .sortWithinPartitions(*order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)  # pin the partitioning for both consumers
+    )
+    wloc = Window.partitionBy("_pid").orderBy(*order_cols)
+    counts = {
+        r["_pid"]: r["n"]
+        for r in part.groupBy("_pid").agg(F.count("*").alias("n")).collect()
+    }
+    offsets, acc = [], 0
+    for pid in sorted(counts):
+        offsets.append((pid, acc))
+        acc += counts[pid]
+    off = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
+    return (
+        part.withColumn("_loc", F.row_number().over(wloc))
+        .join(F.broadcast(off), "_pid")
+        .withColumn(out, (F.col("_off") + F.col("_loc")).cast("long"))
+        .drop("_pid", "_loc", "_off")
+    )
 
 
 @register(
@@ -79,8 +112,6 @@ PASSAGE_WORDS = 16  # word n-gram window for passage-level dedup
     "and must not serialize through one WindowExec task",
 )
 def vocab_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sparkroach.queries.analytics16 import global_row_number
-
     d = load(spark, sf_dir, "documents")
     words = d.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
@@ -622,7 +653,6 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_frame_sample",
-    gated=False,  # r5 rotation candidate (driver window full)
     oracle="""
         WITH vp AS (
             SELECT doc_id,
@@ -681,7 +711,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_resize",
-    gated=False,  # r5 rotation candidate (driver window full)
     oracle="""
         WITH gp AS (
             SELECT doc_id,
@@ -806,7 +835,6 @@ def _ivfpq_oracle() -> str:
     "whole-stage codegen alive (see the PQ note above); scores are "
     "bit-identical to the unrolled DuckDB oracle before the final "
     "ROUND",
-    gated=False,  # r5 rotation candidate (driver window frozen this round)
 )
 def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkroach.queries.llm_ops import _ivf_kmeans_parts

@@ -33,10 +33,6 @@ double division computed identically on both engines; hash-derived
 Reference parity note: the reference (algorand/conduit-cockroachdb) has
 no LLM plane; this module is part of the beyond-reference surface the
 build brief requires.
-
-Registered gated=False — the driver's 50-entry window is full this round —
-but every oracle runs in the local sweep (tests/test_oracle_gate.py,
-`python -m sparkroach.oracle`); r5 rotation candidates.
 """
 
 from __future__ import annotations
@@ -149,7 +145,6 @@ def _simham_oracle() -> str:
     f"join, exact Hamming <= {SIMHAM_TAU} verify on candidates only.  "
     "Pigeonhole makes recall exact at this threshold for under-cap "
     "buckets; all heavy stages are linear in corpus size",
-    gated=False,
 )
 def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -265,7 +260,6 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "min df are integer sums with ONE final IEEE division, so both "
     "engines agree bit-for-bit.  Low mean_df = rare-token outlier doc, "
     "high mean_df = boilerplate; min_df flags hapax-bearing docs",
-    gated=False,
 )
 def doc_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -344,7 +338,6 @@ N_TOP_TRANSITIONS = 20
     "one exact integer division.  The global top-"
     f"{N_TOP_TRANSITIONS} window runs over the vocab²-bounded aggregate, "
     "never the corpus",
-    gated=False,
 )
 def bigram_top_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -431,7 +424,6 @@ def _funnel_oracle() -> str:
     "so the flag join shuffles on doc_id (AQE broadcasts it only when "
     "genuinely small); retention = n_final/n_docs is one exact "
     "integer division",
-    gated=False,
 )
 def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -517,7 +509,6 @@ POSTINGS_HEAD = 10
     "sort list cells (the r5 red recording); the join preserves the "
     "order pin exactly.  One shuffle on term with map-side combine; "
     "corpus frequency joins from the vocab-sized side",
-    gated=False,
 )
 def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -593,7 +584,6 @@ MIX_ALPHA_NOTE = "alpha=0.5 via sqrt (IEEE-exact in both engines)"
     "under partial aggregation).  boost = share/natural_share > 1 marks "
     "up-sampled (small) sources — the point of temperature sampling, "
     "visible in the output",
-    gated=False,
 )
 def temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")

@@ -205,7 +205,6 @@ BPE_TOP = 20
     "rank window runs over the bounded pair table, never the corpus — at "
     "100 TB both aggs have map-side partial combine and the rank input "
     "is a few thousand rows regardless of corpus size",
-    gated=False,  # r5 rotation candidate (driver window full this round)
 )
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -359,7 +358,6 @@ TFIDF_TOP = 3
     "one grouped agg for tf (map-side combine), one for df, one "
     "term-keyed equi-join (both sides already partitioned by term from "
     "their aggregations), per-doc rank window.  No driver-side anything",
-    gated=False,  # r5 rotation candidate (driver window full this round)
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -709,7 +707,6 @@ _TWO32 = 4294967296.0  # 2^32 — scaling by a power of two is float-exact
     "subset — the property random() sampling loses.  One grouped pass "
     "for the rates (broadcast back), one map-side pass to decide — no "
     "shuffle of the corpus",
-    gated=False,  # r5 rotation candidate (driver window full this round)
 )
 def temperature_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -818,7 +815,6 @@ def temperature_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB is exactly this shape: two grouped aggs over the vocabulary "
     "(never the corpus — word frequencies collapse it once), a "
     "broadcast of the single learned merge, and a bounded rank window",
-    gated=False,  # r6 rotation candidate (r5 window is fully committed)
 )
 def bpe_second_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")

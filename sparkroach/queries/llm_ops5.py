@@ -19,10 +19,6 @@ summary, and LSH tuning diagnostics.
   bucket, singletons, Σ C(n,2) pair contribution): the diagnostic that
   tunes band/row counts BEFORE running the pair join (a band whose
   biggest bucket explodes pairs is the one to re-parameterize).
-
-All gated=False on registration: this round's 50 driver slots are frozen
-on the third rotation wave; r5 rotation candidates, swept by the local
-oracle gate at sf0.001/0.01/0.1.
 """
 
 from __future__ import annotations
@@ -89,7 +85,6 @@ def _dup_matrix_oracle() -> str:
     "the matrix is triangular.  Cross-source mass signals scrape overlap "
     "or benchmark leakage; within-source mass signals mirrors — the "
     "split real pipelines act on differently",
-    gated=False,  # r5 rotation candidate (driver window frozen this round)
 )
 def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -206,7 +201,6 @@ TOP_DRIFT_DIMS = 8
     "the actionable artifact: it names WHICH dimensions moved.  The "
     "posexplode→grouped-sum shape is one shuffle by (label, half, dim) "
     "— fully parallel at any corpus size",
-    gated=False,  # r5 rotation candidate (driver window frozen this round)
 )
 def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
@@ -315,7 +309,6 @@ def _card_oracle() -> str:
     "integers.  This is the artifact the mix-weight operators "
     "(domain_mix_weights, temperature_mix_weights) consume — the "
     "card IS the corpus's interface at 100 TB",
-    gated=False,  # r5 rotation candidate (driver window frozen this round)
 )
 def dataset_card_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -404,7 +397,6 @@ def _band_selectivity_oracle() -> str:
     "explodes is the signal to add rows-per-band or rely on the bucket "
     "cap.  Two grouped aggregations over the band table; the corpus is "
     "touched once by the signature stage",
-    gated=False,  # r5 rotation candidate (driver window frozen this round)
 )
 def lsh_band_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -493,7 +485,6 @@ SPAN_WORDS = 16
     "removal.  The window table is corpus×~words rows but every stage "
     "is a grouped agg or equi-join; the position-explode is bounded by "
     f"{SPAN_WORDS}× the dup windows only, never the corpus",
-    gated=False,  # r5 rotation candidate (driver window frozen this round)
 )
 def dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
@@ -551,13 +542,57 @@ def dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# keep-best selection per near-dup cluster (shared by the two oracles below)
+# ---------------------------------------------------------------------------
+
+
+def _keep_best_oracle() -> str:
+    lsh = _lsh_candidates_cte().strip()
+    assert lsh.startswith("WITH ")
+    return f"""
+        WITH RECURSIVE {lsh[len("WITH "):]},
+        edges AS (
+            SELECT c.doc_a, c.doc_b
+            FROM cand c
+            JOIN shing sa ON sa.doc_id = c.doc_a
+            JOIN shing sb ON sb.doc_id = c.doc_b
+            WHERE {_JACC_SQL} >= {_JACCARD_TAU}
+        ),
+        sym AS (
+            SELECT doc_a AS src, doc_b AS dst FROM edges
+            UNION ALL
+            SELECT doc_b AS src, doc_a AS dst FROM edges
+        ),
+        reach(node, r) AS (
+            SELECT DISTINCT src, src FROM sym
+            UNION
+            SELECT s.dst, reach.r FROM reach JOIN sym s ON s.src = reach.node
+        ),
+        comp AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
+        -- NB not named "ranked": the shared LSH CTE already defines one
+        best AS (
+            SELECT comp.cluster_id, comp.node AS doc_id, d.n_chars,
+                   row_number() OVER (
+                       PARTITION BY comp.cluster_id
+                       ORDER BY d.n_chars DESC, comp.node
+                   ) AS rn,
+                   COUNT(*) OVER (PARTITION BY comp.cluster_id) AS sz
+            FROM comp JOIN documents d ON d.doc_id = comp.node
+        )
+        SELECT cluster_id, doc_id AS keep_doc_id,
+               CAST(n_chars AS BIGINT) AS keep_n_chars,
+               CAST(sz - 1 AS BIGINT) AS n_dropped
+        FROM best WHERE rn = 1
+        ORDER BY cluster_id
+    """
+
+
+# ---------------------------------------------------------------------------
 # clean_corpus_report — the dedup DECISIONS, executed
 # ---------------------------------------------------------------------------
 
 
 def _clean_corpus_oracle() -> str:
-    from sparkroach.queries.analytics11 import _keep_best_oracle
-
     keep = _keep_best_oracle().strip()
     assert keep.startswith("WITH RECURSIVE ")
     # reuse the keep-best CTE chain up to `best`, then derive drops
@@ -616,7 +651,6 @@ def _clean_corpus_oracle() -> str:
     "similarity machinery into a DELIVERABLE corpus; the drop set is "
     "corpus-proportional, so the join shuffles on doc_id (no forced "
     "broadcast — AQE broadcasts it only when genuinely small)",
-    gated=False,  # r5 rotation candidate (driver window frozen this round)
 )
 def clean_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkroach.queries.llm_ops import (
@@ -724,7 +758,6 @@ def _lang_confusion_oracle() -> str:
     "predict 'en' — which is exactly the failure this dashboard exists "
     "to catch before a filter ships.  Output bounded by languages², "
     "independent of corpus size",
-    gated=False,  # r6 rotation candidate (r5 window is fully committed)
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkroach.queries.llm_ops import lang_id_stopwords
@@ -760,8 +793,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _leakage_split_oracle() -> str:
-    from sparkroach.queries.analytics11 import _keep_best_oracle
-
     keep = _keep_best_oracle().strip()
     assert keep.startswith("WITH RECURSIVE ")
     head = keep[: keep.index("best AS (")]
@@ -814,7 +845,6 @@ def _leakage_split_oracle() -> str:
     "pairs).  The cluster table is corpus-proportional, so the join "
     "shuffles on doc_id (AQE broadcasts it only when genuinely small); "
     "the assignment is one map-side hash",
-    gated=False,  # r6 rotation candidate (r5 window is fully committed)
 )
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkroach.queries.llm_ops import connected_components
@@ -935,7 +965,6 @@ def _lsh_recall_oracle() -> str:
     "found.  Exact integers plus one final division.  At 100 TB this "
     "report runs on every band-geometry change — the empirical recall "
     "number that justifies (or vetoes) the cap and band parameters",
-    gated=False,  # r6 rotation candidate (r5 window is fully committed)
 )
 def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkroach.queries.llm_ops import _with_shingles
@@ -1038,7 +1067,6 @@ class _PassageWindows:
 
 @register(
     "doc_passages_udtf",
-    gated=False,  # r6 rotation candidate (window frozen this round)
     oracle=f"""
         WITH toks AS (
             SELECT doc_id, string_split(text, ' ') AS t FROM documents
@@ -1095,7 +1123,6 @@ SWEEP_PCTS = [40, 50, 60, 70, 80, 90]
 
 @register(
     "dedup_threshold_sweep",
-    gated=False,  # r6 rotation candidate (window frozen this round)
     oracle=f"""
         {_lsh_candidates_cte()}
         , pairs AS (

@@ -23,6 +23,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sparkroach.queries.rotation import ACTIVE_WINDOW
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -34,14 +36,12 @@ class Query:
     survey_ref: str
     bench: bool = False
     description: str = ""
-    # gated=True → exported through __spark_entry__ to the driver's
-    # correctness gate.  The driver records a bounded number of registry
-    # entries (the first 50 in round 1), so near-duplicate operator shapes
-    # whose coverage is already carried by another gated query are kept
-    # gated=False: still registered, still swept by the LOCAL oracle gate
-    # (tests/test_oracle_gate.py and `python -m sparkroach.oracle`), just
-    # not competing for driver-recorded slots.
-    gated: bool = True
+
+    @property
+    def gated(self) -> bool:
+        """Exported through ``__spark_entry__`` to the external correctness
+        gate: true exactly for the names in the active window."""
+        return self.name in ACTIVE_WINDOW
 
 
 QUERIES: dict[str, Query] = {}
@@ -56,7 +56,6 @@ def register(
     survey_ref: str,
     bench: bool = False,
     description: str = "",
-    gated: bool = True,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query implementation with its oracle."""
 
@@ -70,7 +69,6 @@ def register(
             survey_ref=survey_ref,
             bench=bench,
             description=description,
-            gated=gated,
         )
         return fn
 

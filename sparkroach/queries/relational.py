@@ -28,7 +28,6 @@ from sparkroach.tables import load
 
 @register(
     "txn_point_lookup",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle="""
         SELECT o_orderkey, o_custkey, o_orderstatus,
                CAST(o_totalprice AS DOUBLE) AS o_totalprice, o_orderdate
@@ -53,7 +52,6 @@ def txn_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_round_range",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT l_orderkey, l_linenumber, l_partkey,
                CAST(l_quantity AS DOUBLE) AS l_quantity, l_shipdate
@@ -79,7 +77,6 @@ def txn_round_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_keyset_pagination",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT l_orderkey, l_linenumber, l_partkey,
                CAST(l_extendedprice AS DOUBLE) AS l_extendedprice
@@ -113,7 +110,6 @@ def txn_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_keyset_page_desc",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT l_orderkey, l_linenumber, l_partkey,
                CAST(l_extendedprice AS DOUBLE) AS l_extendedprice
@@ -154,7 +150,6 @@ def txn_keyset_page_desc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_type_filter",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT event_type, count(*) AS n,
                CAST(SUM(CAST(value AS DECIMAL(28,10))) AS DOUBLE) AS total_value
@@ -181,7 +176,6 @@ def txn_type_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_note_prefix",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT p_partkey, p_name, p_brand
         FROM part
@@ -202,7 +196,6 @@ def txn_note_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_amount_range",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
         FROM orders
@@ -223,7 +216,6 @@ def txn_amount_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_effective_amount",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT l_orderkey, l_linenumber,
                CAST(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -257,7 +249,6 @@ def txn_effective_amount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_time_window_join",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT l.l_returnflag,
                count(*) AS n,
@@ -289,7 +280,6 @@ def txn_time_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "participation_semijoin",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     bench=True,  # r02: the chain-read path (address+range semi-join page) in the headline set
     oracle="""
         SELECT o_orderkey, o_custkey, o_orderdate
@@ -312,7 +302,6 @@ def participation_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_json_field_filter",
-    gated=False,  # r4: rotated OUT — driver-green r1–r3; local-oracle-swept
     oracle="""
         SELECT event_id, user_id,
                CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
@@ -335,7 +324,6 @@ def txn_json_field_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "block_with_payset",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT o.o_orderkey, o.o_orderdate, l.l_linenumber, l.l_partkey,
                CAST(l.l_quantity AS DOUBLE) AS l_quantity
@@ -369,7 +357,6 @@ def block_with_payset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "account_keyset_page",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS c_acctbal
         FROM customer
@@ -392,7 +379,6 @@ def account_keyset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "account_balance_filter",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS c_acctbal
         FROM customer
@@ -413,7 +399,6 @@ def account_balance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "account_has_asset_semijoin",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT c.c_custkey, c.c_name
         FROM customer c
@@ -439,7 +424,6 @@ def account_has_asset_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "account_resources_agg",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT c.c_custkey, c.c_name,
                count(o.o_orderkey) AS n_orders,
@@ -472,7 +456,6 @@ def account_resources_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "account_max_resources_guard",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT o_custkey, count(*) AS n_orders
         FROM orders
@@ -500,7 +483,6 @@ def account_max_resources_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asset_ilike_search",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT p_partkey, p_name, p_type
         FROM part
@@ -524,7 +506,6 @@ def asset_ilike_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asset_keyset_page",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT p_partkey, p_name, CAST(p_retailprice AS DOUBLE) AS p_retailprice
         FROM part
@@ -549,7 +530,6 @@ def asset_keyset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asset_balance_query",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT l_orderkey, l_linenumber, l_suppkey,
                CAST(CAST(l_quantity AS DECIMAL(20,0)) AS DOUBLE) AS amount
@@ -578,7 +558,6 @@ def asset_balance_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "app_creator_filter",
-    gated=False,  # r3: rotated OUT — driver-verified green in r1/r2; local-oracle-swept
     oracle="""
         SELECT s_suppkey, s_name, CAST(s_acctbal AS DOUBLE) AS s_acctbal
         FROM supplier
@@ -599,7 +578,6 @@ def app_creator_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "box_keyset_page",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT doc_id, source, n_chars
         FROM documents
@@ -627,7 +605,6 @@ def box_keyset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "health_probe",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT max(o_orderkey) AS max_round, count(*) AS n_rounds,
                max(o_orderdate) AS latest_time
@@ -647,7 +624,6 @@ def health_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "prune_candidates",
-    gated=False,  # r4 end-of-round: rotated OUT (driver-green r1-r3) to record this session's new ops
     oracle="""
         SELECT count(*) AS n_prunable, min(l_shipdate) AS oldest
         FROM lineitem

@@ -1,968 +1,84 @@
-"""Driver-gate rotation windows.
+"""The gate window: the one place ``Query.gated`` is decided.
 
-The driver records a bounded number of registry entries per round
-(:data:`sparkroach.queries.registry.DRIVER_WINDOW` = 50), while the
-registry holds 200+ operators.  Rounds therefore ROTATE which queries
-occupy the recorded window; everything else stays registered and is
-swept by the LOCAL oracle gate (tests/test_oracle_gate.py,
-``python -m sparkroach.oracle``) at sf0.001/0.01/0.1 every round.
-
-Up to round 4 the rotation was expressed as per-``register()`` ``gated=``
-flags scattered across ~35 modules; from round 5 on the window is this
-single authoritative name list, applied over the registry after all
-modules import (``sparkroach/queries/__init__.py``).  The per-call
-``gated=`` flag remains only as documentation of each query's default
-disposition and as the fallback when no window is pinned.
-
-The r5 window below is exactly the 49 never-driver-recorded queries
-pinned in COVERAGE.md (r5 rotation candidates) plus the rows-only
-``chain_end_to_end`` — 50 names, filling the window and giving a first
-driver recording to the entire backlog-eligible set.
-
-Round 6 flips :data:`ACTIVE_WINDOW` to the R6 set: the 36 queries pinned
-in :data:`R6_ROTATION`, the r5-red :data:`R6_RERECORD` re-record, queries
-registered during r6 itself, and the rows-only ``chain_end_to_end``.  A
-"recorded" disposition now means a GREEN recording (all three driver
-match flags true) — a red row re-enters the window until it lands green
-(the r5 ledger hole, VERDICT r5 item 2).
+The external correctness gate records at most 50 registry entries per
+round.  A query is gated, i.e. exported through ``__spark_entry__``,
+exactly when its name is in :data:`ACTIVE_WINDOW`.  Every other
+registered query is swept only by the local oracle gate
+(tests/test_oracle_gate.py, ``python -m sparkroach.oracle``), and must
+either hold a green recording in a ``CORRECTNESS_r*.json`` file or be
+listed in :data:`DELEGATED` with a twin that has one
+(tests/test_rotation.py).
 """
 
 from __future__ import annotations
 
-# Round-5 driver window (HISTORICAL — round 6 uses R6_WINDOW below): 49
-# oracle-bearing first-recordings + the rows-only chain_end_to_end
-# (value-checked by tests/test_chain_end_to_end.py).  48 landed green in
-# CORRECTNESS_r05; inverted_index_postings landed RED (list-typed output
-# column crashed the driver's pandas canonicalization) and is re-pinned
-# via R6_RERECORD with a scalarized output schema.
-R5_WINDOW: frozenset[str] = frozenset(
-    {
-        "ann_ivfpq_adc",
-        "bigram_top_transitions",
-        "bpe_pair_counts",
-        "bucketed_orders_join",
-        "clean_corpus_report",
-        "cross_source_dup_matrix",
-        "customer_order_state_asof",
-        "dataset_card_stats",
-        "dedup_keep_best",
-        "doc_rarity_score",
-        "docs_grouping_sets",
-        "documents_format_roundtrip",
-        "documents_orc_roundtrip",
-        "documents_quality_expectations",
-        "dup_span_coverage",
-        "events_dedup_jitter_streamed",
-        "events_gap_fill",
-        "events_incremental_rollup",
-        "events_null_semantics_report",
-        "events_partitioned_read",
-        "events_peak_window",
-        "events_props_stats",
-        "events_rollup_update_streamed",
-        "events_session_bookends",
-        "events_session_range_join",
-        "events_session_window_builtin",
-        "events_type_pivot",
-        "events_type_transitions",
-        "events_user_value_ntiles",
-        "events_value_unpivot",
-        "events_value_winsorize",
-        "fixed_size_sample_per_source",
-        "hll_sketch_merge",
-        "inverted_index_postings",
-        "kmv_type_jaccard",
-        "label_centroid_drift",
-        "lsh_band_selectivity",
-        "multimodal_frame_sample",
-        "multimodal_resize",
-        "quality_filter_funnel",
-        "salted_hot_key_join",
-        "simhash_hamming_pairs",
-        "sql_front_door_pricing",
-        "suppkey_skew_report",
-        "temperature_mix_weights",
-        "temperature_sample_by_lang",
-        "term_cooccurrence_lift",
-        "tfidf_top_terms",
-        "user_daily_activity_full_outer",
-        # rows-only by design; value-checked in tests/test_chain_end_to_end.py
-        "chain_end_to_end",
-    }
-)
-
-# Round-6 rotation pin: every never-driver-recorded query whose EXECUTION
-# PATH is novel (streaming state shapes, Python lanes, source formats /
-# physical layout, iterative plans, distinct join/window machinery) —
-# each must get its own driver recording.  Queries registered during r5
-# join this set.
-R6_ROTATION: frozenset[str] = frozenset(
-    {
-        # streaming gates with state shapes no recorded gate exercises
-        "events_dedup_then_rollup_streamed",  # chained state stores
-        "events_full_join_streamed",  # both-side state expiry
-        "events_sessions_timeout_streamed",  # EventTimeTimeout path
-        "events_stream_static_join",  # source-progress-only recovery
-        # Python execution lanes (each a distinct eval path in the engine)
-        "doc_passages_udtf",
-        "docs_arrow_udf_checksum",
-        "events_user_trend_grouped_map",
-        "events_value_median_udaf",
-        "multimodal_features_arrow",
-        # source formats / physical layout
-        "multimodal_binaryfile_ingest",
-        "documents_text_source_roundtrip",
-        "documents_xml_roundtrip",
-        "documents_sql_ddl_roundtrip",
-        "documents_schema_evolution",
-        "documents_shard_export",
-        "lineitem_zorder_read",
-        "events_dynamic_partition_overwrite",
-        # iterative / recursive plans
-        "dup_graph_recursive_cte",
-        "dup_graph_bfs_layers",
-        "bpe_second_merge",
-        # as-of (bench headline, never recorded)
-        "events_click_purchase_asof",
-        # dedup-plane certification paths
-        "prefix_jaccard_join_exact",
-        "lsh_recall_report",
-        "leakage_safe_split",
-        # distinct analytic machinery
-        "events_scd2_intervals",
-        "sessions_concurrency_peak",  # distributed prefix sum
-        "events_path_signature",
-        "part_brand_multiset_ops",  # INTERSECT/EXCEPT ALL bag semantics
-        "events_props_variant_hist",  # VARIANT type
-        "docs_null_safe_join",  # null-safe equality join
-        "table_diff_buckets",
-        "orders_lineitem_dq_audit",
-        "user_activity_bitmap_pairs",
-        # registered during r5
-        "multimodal_jpeg_decode",  # real baseline JPEG codec lane
-        "bm25_top_docs",  # lexical retrieval over posting lists
-        "docs_lang_stats_arrow_grouped",  # applyInArrow grouped-map lane
-        # registered during r6
-        "multimodal_mjpeg_decode",  # RIFF/AVI MJPEG container + per-frame decode
-        "events_value_ks_drift",  # dual-counter packed distributed prefix KS
-    }
-)
-
-# r5 rows that came back RED at the driver: fixed this round and
-# re-pinned until a GREEN recording exists.  inverted_index_postings'
-# values were always correct (judge re-verified vs DuckDB) — its
-# postings_head ARRAY column crashed the driver's pandas sort_values
-# canonicalization; the column is now a space-joined STRING on both
-# sides (llm_ops3.py).
-R6_RERECORD: frozenset[str] = frozenset({"inverted_index_postings"})
-
-# Rows-only by design (no SQL-expressible oracle): EMPTY since r8 —
-# chain_end_to_end, the one historical member, became oracle-bearing
-# (the gate dumps its deterministic feed and the DuckDB oracle
-# re-derives the ingest digest from the raw input; chain_demo.py).
-# Its r1–r7 recordings were rows-only; from r8 a recording must be a
-# full hash match to count.  The name keeps its driver slot every round
-# via CHAIN_GATE below.
-ROWS_ONLY: frozenset[str] = frozenset()
-CHAIN_GATE: frozenset[str] = frozenset({"chain_end_to_end"})
-
-# Round-6 driver window: the pinned novel-execution-path set, the red
-# re-record, and the rows-only chain gate.
-R6_WINDOW: frozenset[str] = R6_ROTATION | R6_RERECORD | CHAIN_GATE
-
-# Round-7 promotion: the ENTIRE r6 delegation set (preserved below as
-# R6_DELEGATED) converted into hard driver signal.  Delegation was a
-# rationing device from when the backlog exceeded the window; with the
-# registry closed (r6 verdict: 198 driver-green + 24 delegated + 1
-# rows-only = 223, zero undisposed) the 24 delegated queries are the only
-# remaining gap between "every query" and "every query the driver has
-# verified".  All 24 are local-oracle green at three SFs; the r6 judge
-# independently re-verified 10 of them at sf0.01.
-R7_PROMOTED: frozenset[str] = frozenset(
-    {
-        "ann_ivfpq_rerank",
-        "cms_join_size_estimate",
-        "customer_k_anonymity_ladder",
-        "dedup_threshold_sweep",
-        "denylist_scrub_report",
-        "doc_containment_pairs",
-        "doc_shingle_novelty",
-        "docs_explode_outer_census",
-        "docs_levenshtein_verify",
-        "docs_sorted_neighborhood_pairs",
-        "embedding_triplet_mining",
-        "events_active_day_streaks",
-        "events_approx_quantile_check",
-        "events_drift_timeline",
-        "events_ewma_dyadic",
-        "events_interarrival_stats",
-        "events_sliding_window_rollup",
-        "events_trailing_hour_peak",
-        "events_type_drift_chi2",
-        "lang_id_confusion",
-        "orders_monthly_seasonality",
-        "orders_priority_rollup",
-        "orders_profile_report",
-        "token_cosine_pairs",
-    }
-)
-
-# Queries registered during round 7 (novel execution paths — each needs
-# its own driver recording).
-R7_NEW: frozenset[str] = frozenset(
-    {
-        # YCbCr 4:2:0 color JPEG: subsampled-MCU entropy layout + general
-        # sampling-factor decode + chroma-plane exactness columns
-        "multimodal_jpeg_color_decode",
-        # COLOR video: 4:2:0 frames inside the RIFF/AVI container with a
-        # per-frame luma term (container + subsampled codec composed)
-        "multimodal_mjpeg_color_decode",
-        # real regex PII detection+redaction over doc_id-injected spans
-        "pii_scrub_report",
-        # new-batch-vs-stored-index incremental dedup (capped index side)
-        "dedup_incremental_new_docs",
-        # from-scratch Avro OCF source/sink behind the Python DataSource
-        # API (strings + null unions + both codecs + metadata schema
-        # inference / array<float> + multi-block framing)
-        "documents_avro_roundtrip",
-        "embeddings_avro_roundtrip",
-        # spec Schema Resolution: mixed writer generations, one reader
-        # schema, missing->null + numeric promotion
-        "documents_avro_schema_evolution",
-        # WARC 1.0 (Common Crawl layout) export + file-parallel re-ingest
-        # through the generic binary-file sink and binaryFile source
-        "documents_warc_ingest",
-        # MOSS winnowing: window-min k-gram fingerprints, capped
-        # fingerprint equi-join (partial-overlap detection plane)
-        "winnowing_match_pairs",
-        # ISO BMFF (MP4): decode-free metadata probe over an 'avc1'
-        # track, and REAL Motion-JPEG-in-MP4 frame decode ('jpeg'
-        # sample entries through the general stsc/stco chunk map)
-        "multimodal_mp4_probe",
-        "multimodal_mp4_decode",
-        # WARC->WET content extraction: boilerplate-block removal + tag
-        # strip, pinned lossless (md5(extracted) == md5(original))
-        "html_text_extraction",
-        # fastText-shaped keep/drop: hashing-trick linear scorer with an
-        # integer cross-multiplied decision
-        "quality_linear_classifier",
-        # --- late wave 3 (fills the window to exactly 50) ---
-        # WebDataset tar shards: strict stdlib-tarfile codec through the
-        # binary-file sink + file-parallel binaryFile re-ingest
-        "documents_tar_webdataset_ingest",
-        # crawl-frontier URL canonicalization + cluster histogram
-        "url_canonical_dedup",
-        # count-based n-gram LM filter with a real train/score split
-        "lm_bigram_coverage_score",
-        # Unicode NFC: arrow unicodedata lane vs DuckDB nfc_normalize
-        "text_nfc_normalize_report",
-        # image near-dup: real JPEG decode → integer aHash → banded
-        # Hamming pairs (perceptual dedup over the multimodal plane)
-        "multimodal_image_ahash_pairs",
-    }
-)
-
-# Already-green queries whose EXECUTION PATH changed during r7 — a green
-# history row no longer describes the shipped code, so each takes one of
-# the window's spare slots for a fresh recording:
-#   - multimodal_jpeg_decode / multimodal_mjpeg_decode: the baseline
-#     decoder was generalized to arbitrary 1-2 sampling factors (the old
-#     1x1-only path now runs through the general MCU loop) and the AVI
-#     parser gained declared-size validation;
-#   - events_value_ks_drift: the packed-prefix plan now carries the
-#     2^31 runtime overflow guard inside the numerator expression;
-#   - dedup_embedding_cosine: the int8 qdot ragged path now raises on
-#     dimension mismatch (UDF body changed);
-#   - ann_pq_adc / ann_ivfpq_adc: expression builders were parameterized
-#     (outputs byte-identical by construction — recording re-proves it);
-#   - ann_recall_report: the rerank method row re-routes through the
-#     re-pinned two-stage chain and multiprobe@2 cost attribution.
-R7_TOUCHED: frozenset[str] = frozenset(
-    {
-        "multimodal_jpeg_decode",
-        "multimodal_mjpeg_decode",
-        "events_value_ks_drift",
-        "dedup_embedding_cosine",
-        "ann_pq_adc",
-        "ann_ivfpq_adc",
-        "ann_recall_report",
-    }
-)
-
-# Round-7 driver window: every formerly-delegated query, r7-new
-# registrations, r7-touched re-records, and the rows-only chain gate.
-R7_WINDOW: frozenset[str] = R7_PROMOTED | R7_NEW | R7_TOUCHED | CHAIN_GATE
-
-# Round-8 promotion: the ENTIRE r7 delegation backlog (the 26 queries
-# registered after the r7 window filled to 50 — preserved below as
-# R7_DELEGATED) converted into hard driver signal.  All 26 were
-# local-oracle green at three SFs when registered, all 26 were
-# independently hash-match re-verified at sf0.01 by the r7 judge, and
-# this promotion returns the registry to 100% driver-verified (verdict
-# r7 "What's missing" #1).
-R8_PROMOTED: frozenset[str] = frozenset(
+ACTIVE_WINDOW: frozenset[str] = frozenset(
     {
         "arrow_ipc_roundtrip",
+        "bigram_top_transitions",
+        "bitext_margin_pairs",
+        "bootstrap_mean_ci",
         "bpe_encode_apply",
+        "chain_end_to_end",
+        "clean_corpus_report",
+        "customer_l_diversity_report",
         "customer_record_linkage",
+        "dataset_card_stats",
+        "dbscan_embedding_clusters",
         "dedup_cluster_bcubed",
+        "dedup_embedding_cosine",
+        "doc_rarity_score",
         "documents_pdf_text_ingest",
         "documents_sqlite_ingest",
         "dsir_importance_weights",
+        "dup_graph_triangles",
         "dup_span_cut_list",
         "embedding_power_iteration_pc1",
         "epoch_shuffle_order",
         "events_cusum_drift",
+        "events_ordered_funnel_maxgap",
         "events_small_file_compaction",
+        "hybrid_rrf_fusion",
+        "inverted_index_postings",
+        "knn_graph_ivf",
+        "leakage_safe_split",
         "lineitem_corr_matrix",
+        "lsh_recall_report",
         "mmr_diversified_topk",
         "mojibake_repair_report",
         "multimodal_goertzel_tone",
+        "multimodal_png_decode",
         "orders_benford_audit",
         "part_pareto_frontier",
         "phrase_query_positions",
+        "quality_filter_funnel",
         "quality_rater_kappa",
         "robots_disallow_filter",
         "script_mix_report",
+        "search_ndcg_report",
+        "semdedup_clusters",
         "shard_rendezvous_assign",
         "source_budget_apportion",
-        "substring_denylist_scan",
-        "tokenizer_fertility_report",
-    }
-)
-
-# Already-green queries whose EXECUTION PATH changed during r8 — each
-# takes a window slot for a fresh recording (verdict r7 What's-wrong
-# items 1 and 2, the 100×-scale plan fixes):
-#   - forced corpus-side broadcast() hints removed from the embedding
-#     pair-scoring joins (dedup_embedding_cosine, semdedup_clusters,
-#     knn_graph_ivf, dbscan_embedding_clusters) and from every other
-#     corpus/vocab-proportional build side (dataset_card_stats,
-#     clean_corpus_report, leakage_safe_split, source_term_salience,
-#     doc_rarity_score, bigram_top_transitions, quality_filter_funnel,
-#     inverted_index_postings) — plans now shuffle those joins, AQE
-#     broadcasts only when genuinely small;
-#   - the three unbounded single-partition windows replaced:
-#     vocab_term_stats ranks via the distributed global_row_number
-#     recipe, lsh_recall_report picks probes via orderBy().limit()
-#     (TakeOrderedAndProject), suppkey_skew_report takes top-N first
-#     and ranks only the bounded survivors.
-R8_TOUCHED: frozenset[str] = frozenset(
-    {
-        "dedup_embedding_cosine",
-        "semdedup_clusters",
-        "knn_graph_ivf",
-        "dbscan_embedding_clusters",
-        "dataset_card_stats",
-        "clean_corpus_report",
-        "leakage_safe_split",
         "source_term_salience",
-        "doc_rarity_score",
-        "bigram_top_transitions",
-        "quality_filter_funnel",
-        "inverted_index_postings",
-        "vocab_term_stats",
-        "lsh_recall_report",
+        "substring_denylist_scan",
         "suppkey_skew_report",
+        "tokenizer_fertility_report",
+        "vocab_term_stats",
     }
 )
 
-# Queries registered during round 8 (novel execution paths — each needs
-# its own driver recording).  26 promoted + 15 touched + chain + these
-# must stay <= 50.
-R8_NEW: frozenset[str] = frozenset(
-    {
-        # chained ordered funnel with per-step max gap (windowFunnel)
-        "events_ordered_funnel_maxgap",
-        # l-diversity privacy audit (k-anonymity's sibling)
-        "customer_l_diversity_report",
-        # degree-oriented exact triangle count over the dup graph
-        "dup_graph_triangles",
-        # deterministic single-pass Poisson bootstrap CI
-        "bootstrap_mean_ci",
-        # from-scratch lossless PNG codec lane (all 5 filters, CRC, zlib)
-        "multimodal_png_decode",
-        # reciprocal rank fusion of two retrieval shortlists
-        "hybrid_rrf_fusion",
-        # Artetxe-Schwenk ratio-margin pair mining over the kNN graph
-        "bitext_margin_pairs",
-        # nDCG@10 ranking evaluation with literal decimal discounts
-        "search_ndcg_report",
-    }
-)
+# Gated queries with no SQL-expressible oracle (the gate records a
+# rows-only check for them): none since chain_end_to_end became
+# oracle-bearing.
+ROWS_ONLY: frozenset[str] = frozenset()
 
-# Round-8 driver window.
-R8_WINDOW: frozenset[str] = R8_PROMOTED | R8_TOUCHED | R8_NEW | CHAIN_GATE
-
-# The window applied this round.
-ACTIVE_WINDOW: frozenset[str] | None = R8_WINDOW
-
-# Active delegation set: EMPTY at the r8 promotion — the entire r7
-# backlog (R7_DELEGATED below, 26 names) went into the R8 window.
-# Queries registered after the r8 window fills join this dict with a
-# driver-proven twin, first in line for the R9 window.
-# name -> (driver-proven twin, one-line justification)
+# name -> (gate-proven twin, one-line justification)
 DELEGATED: dict[str, tuple[str, str]] = {
-    "multimodal_g711_roundtrip": (
-        "multimodal_goertzel_tone",
-        "real audio codec through the Arrow decode lane mirrored by a "
-        "doc_id-arithmetic integer oracle (r8-window gate); the µ-law "
-        "segment/mantissa conformance is unit-pinned in "
-        "tests/test_llm_ops19.py.  R9-window candidate",
-    ),
-    "minhash_bbit_estimate": (
-        "minhash_jaccard_verified",
-        "capped LSH candidates scored by a per-pair exact similarity "
-        "(the recorded verify plan family); the 1-bit signature "
-        "compression + agreement estimator is the increment, "
-        "unit-pinned in tests/test_llm_ops19.py.  R9-window candidate",
-    ),
-    "events_value_mad_outliers": (
-        "events_value_median_udaf",
-        "exact-median semantics recorded through the Python-UDAF lane "
-        "(r6 gate); the increment — chained counting bisections for "
-        "median + MAD and the integer robust-z rule — is pinned in "
-        "tests/test_llm_ops19.py.  R9-window candidate",
-    ),
-    "documents_zip_shard_ingest": (
-        "documents_tar_webdataset_ingest",
-        "the identical archive lane shape (R7-window gate): "
-        "applyInPandas shard build, binfiles two-phase sink, binaryFile "
-        "re-ingest, strict parse, checksum aggregate; the ZIP codec's "
-        "central-directory/CRC strictness is pinned in "
-        "tests/test_llm_ops19.py.  R9-window candidate",
-    ),
-    "events_topk_per_user_streamed": (
-        "events_sessions_streamed",
-        "the identical applyInPandasWithState lane (staged micro-batch "
-        "files, mid-stream restart on one checkpoint, sentinel-closed "
-        "final emission — r2-recorded, re-recorded r5); the increment "
-        "is the bounded order-statistic accumulator state, pinned "
-        "against the batch rank window in tests/test_streaming_events. "
-        "R9-window candidate",
-    ),
-    "ann_nsw_beam_search": (
-        "knn_graph_ivf",
-        "the graph build is the recorded kNN machinery (R8-window "
-        "re-record); the greedy beam is a bounded-iteration loop of "
-        "broadcast-probe joins (the recorded pagerank/BFS iteration "
-        "family); beam behavior unit-pinned in tests/test_llm_ops19.py. "
-        " R9-window candidate",
-    ),
-    "multimodal_gif_decode": (
-        "multimodal_png_decode",
-        "lossless image codec through the identical mapInPandas lane "
-        "with a pixel-arithmetic oracle (R8-window gate); the LZW "
-        "family's corner cases (KwKwK, width growth, CLEAR reset) are "
-        "unit-pinned in tests/test_llm_ops19.py.  R9-window candidate",
-    ),
-    "events_value_exact_median": (
-        "events_value_median_udaf",
-        "the exact-median result recorded through the Python-UDAF lane "
-        "(r6 gate); the increment — O(log range) counting-bisection "
-        "with 1-row bookkeeping collects instead of any sort — is "
-        "unit-pinned in tests/test_llm_ops19.py.  R9-window candidate",
-    ),
-    "multimodal_qoi_decode": (
-        "multimodal_png_decode",
-        "lossless image codec through the identical mapInPandas lane "
-        "with a pixel-arithmetic oracle (R8-window gate); the QOI "
-        "run/index-cache/delta chunk semantics and strict framing are "
-        "unit-pinned in tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "documents_lz4_block_roundtrip": (
-        "documents_tar_webdataset_ingest",
-        "real bytes built, carried and strictly re-parsed through "
-        "mapInPandas stages with a text-hash oracle (driver-proven r7 "
-        "gate); the LZ4 sequence semantics (overlap copies, length "
-        "extensions, end-of-block rules) are unit-pinned in "
-        "tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "source_priority_sample": (
-        "fixed_size_sample_per_source",
-        "md5-deterministic per-source top-k sampling through a per-key "
-        "rank window (the recorded plan family); the DLT threshold "
-        "estimator and exact-ratio priorities are unit-pinned in "
-        "tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "lm_kneser_ney_bigram": (
-        "lm_bigram_coverage_score",
-        "the recorded count-based bigram LM plane (r7 gate); the "
-        "interpolated-KN quarters algebra and exact per-context mass "
-        "are pinned in tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "customer_soundex_blocking": (
-        "customer_record_linkage",
-        "blocking-key pair generation over synthesized customer "
-        "identities (the recorded linkage plan family, R8 window); the "
-        "NARA Soundex conformance vectors are unit-pinned in "
-        "tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "events_minute_acf": (
-        "orders_monthly_seasonality",
-        "time-series lag-structure diagnostics over an exact integer-"
-        "cents rollup (recorded r7 plan family); the zero-filled-grid "
-        "ACF algebra is pinned against a numpy reference in "
-        "tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "events_hourly_theil_sen": (
-        "events_value_median_udaf",
-        "exact lower-median semantics through a recorded lane (r6 "
-        "gate); the increment — median over the time-bounded pairwise-"
-        "slope set + Siegel intercept — is pinned against numpy in "
-        "tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "events_ewma_state_streamed": (
-        "events_sessions_streamed",
-        "the identical applyInPandasWithState lane (staged micro-batch "
-        "files, mid-stream restart on one checkpoint, sentinel-closed "
-        "final emission — r2-recorded, re-recorded r5); the increment "
-        "— recursive integer state replayed by a recursive-CTE oracle "
-        "— is pinned in tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "events_delta_varint_roundtrip": (
-        "documents_tar_webdataset_ingest",
-        "real bytes built and strictly re-parsed through grouped-"
-        "pandas stages with a content-hash oracle (driver-proven r7 "
-        "lane family); zigzag/LEB128/delta semantics unit-pinned in "
-        "tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "multimodal_rice_audio_roundtrip": (
-        "multimodal_goertzel_tone",
-        "real audio codec through the mapInPandas lane with a closed-"
-        "form integer oracle (recorded r7 family, via the g711 "
-        "delegation chain); Rice coding + predictor selection are "
-        "unit-pinned in tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "multimodal_tiff_decode": (
-        "multimodal_png_decode",
-        "lossless image codec through the identical mapInPandas lane "
-        "with a pixel-arithmetic oracle (R8-window gate); the PackBits "
-        "tokens and strict IFD walk are unit-pinned in "
-        "tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "documents_bwt_shard_roundtrip": (
-        "documents_tar_webdataset_ingest",
-        "shard bytes built in applyInPandas, strictly re-parsed and "
-        "checksum-aggregated (driver-proven r7 gate); the BWT/MTF/RLE "
-        "conformance and measured compression are unit-pinned in "
-        "tests/test_llm_ops20.py.  R9-window candidate",
-    ),
-    "rouge_overlap_pairs": (
-        "token_cosine_pairs",
-        "per-pair token-multiset similarity on the capped LSH candidate "
-        "set (recorded r7 verify plan family); the ROUGE clipped-"
-        "overlap semantics are unit-pinned in tests/test_llm_ops20.py. "
-        " R9-window candidate",
-    ),
-    "rake_keywords": (
-        "tfidf_top_terms",
-        "corpus-wide term scoring reduced to a bounded top-N shortlist "
-        "(the recorded plan family); the RAKE degree/frequency "
-        "semantics are unit-pinned in tests/test_llm_ops20.py.  "
-        "R9-window candidate",
-    ),
-    "events_sax_quantile_words": (
-        "orders_monthly_seasonality",
-        "time-bucketed series summarization over exact integer cents "
-        "(the recorded r7 time-series family); PAA/alphabet semantics "
-        "pinned against a pure-python reference in "
-        "tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "user_activity_gini": (
-        "events_user_value_ntiles",
-        "global total-order statistics over the per-user value "
-        "distribution (the recorded inequality/rank family); the Gini "
-        "identity and edges are pinned against numpy in "
-        "tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "events_markov_stationary": (
-        "events_type_transitions",
-        "the recorded per-user lead/lag transition extraction is the "
-        "distributed stage; the 5-state quantized power iteration is "
-        "pinned against a numpy eigenvector in "
-        "tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "events_hilbert_locality_report": (
-        "lineitem_zorder_read",
-        "space-filling-curve layout machinery over the same key-"
-        "interleave idea (recorded r6 gate); the Hilbert construction "
-        "is pinned cell-exhaustively against the python reference in "
-        "tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "lineitem_ols_cramer": (
-        "orders_profile_report",
-        "one-pass exact sufficient statistics reduced through a 1-row "
-        "bookkeeping collect (the recorded profiling plan family); the "
-        "Cramer solution is pinned against numpy least squares in "
-        "tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "events_ams_f2_sketch": (
-        "hll_distinct_sketch",
-        "md5-deterministic mergeable sketch with exact integer "
-        "registers (recorded bench headline); the AMS estimator's "
-        "unbiasedness/concentration is pinned over many hash salts in "
-        "tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "dup_graph_kcore": (
-        "pagerank_dup_graph",
-        "bounded-iteration loop of joins/aggregations over the "
-        "identical verified near-dup edge set (the recorded iteration "
-        "plan family); peeling semantics pinned on controlled graphs "
-        "in tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "events_mann_whitney_u": (
-        "events_value_ks_drift",
-        "two-sample distribution comparison over exact integer cents "
-        "through the distributed prefix-scan recipe (recorded r7 plan "
-        "family); midrank/tie-correction algebra pinned against scipy "
-        "conventions in tests/test_analytics29.py.  R9-window candidate",
-    ),
-    "lineitem_spearman_corr": (
-        "orders_profile_report",
-        "one-pass exact sufficient statistics with a fixed-shape "
-        "double tail (the recorded profiling plan family, r7 window); "
-        "the centered-midrank identity and scipy agreement are pinned "
-        "in tests/test_analytics29.py.  R9-window candidate",
-    ),
     "events_zone_map_report": (
-        "documents_shard_export",
-        "controlled file write + re-read verification lane (r6 gate); "
-        "the per-file min/max zone-map semantics and sorted-layout "
+        "events_small_file_compaction",
+        "controlled file write + re-read verification lane (window "
+        "gate); the per-file min/max zone-map semantics and sorted-layout "
         "contiguous-skip property are unit-pinned in "
-        "tests/test_analytics28.py.  R9-window candidate",
+        "tests/test_analytics28.py",
     ),
 }
-
-# HISTORICAL — the r7 delegation set, kept for the ledger (these 26 ran
-# r7 under local-oracle-only verification with the named driver-proven
-# twin; promoted wholesale in r8 as R8_PROMOTED).
-R7_DELEGATED: dict[str, tuple[str, str]] = {
-    "robots_disallow_filter": (
-        "dedup_keep_best",
-        "broadcast candidate join + one window argmax per key — the "
-        "recorded keep-best plan family; RFC 9309 longest-match is the "
-        "ordering expression, not new machinery.  R8-window candidate",
-    ),
-    "embedding_power_iteration_pc1": (
-        "pagerank_dup_graph",
-        "fixed-iteration loop of grouped aggregations with a broadcast "
-        "per-iteration state vector — the recorded pagerank plan family, "
-        "applied to the Gram matrix-vector product.  R8-window candidate",
-    ),
-    "dup_span_cut_list": (
-        "dup_span_coverage",
-        "identical window/dup-hash/cover stages (r5-recorded); the "
-        "increment — gaps-and-islands span extraction — is unit-pinned "
-        "on a controlled corpus.  R8-window candidate",
-    ),
-    "phrase_query_positions": (
-        "bm25_top_docs",
-        "posting-list retrieval plan family (r6-recorded); positions "
-        "replace term frequencies and the adjacency self-join replaces "
-        "the score aggregation.  R8-window candidate",
-    ),
-    "dedup_cluster_bcubed": (
-        "docs_grouping_sets",
-        "multi-key grouped-count plan family (r5-recorded); the B-cubed "
-        "integer-quantized arithmetic is unit-pinned against a "
-        "hand-computed contingency.  R8-window candidate",
-    ),
-    "dsir_importance_weights": (
-        "lm_bigram_coverage_score",
-        "train/score-split hashed-n-gram plan family (in the R7 "
-        "window); integer ratio weights + broadcast weight table are "
-        "the increment, unit-pinned for monotonicity.  R8-window "
-        "candidate",
-    ),
-    "quality_rater_kappa": (
-        "docs_grouping_sets",
-        "grouped-count contingency + integer-quantized ratio (the "
-        "recorded multi-key count plan family); kappa's identity/sign "
-        "behavior is unit-pinned on controlled raters.  R8-window "
-        "candidate",
-    ),
-    "source_budget_apportion": (
-        "dedup_keep_best",
-        "grouped counts + one window rank over a source-cardinality-"
-        "bounded table (the recorded window-argmax plan family); "
-        "Σ quota == B is unit-pinned for adversarial remainders.  "
-        "R8-window candidate",
-    ),
-    "tokenizer_fertility_report": (
-        "temperature_mix_weights",
-        "per-key grouped integer sums + final-step divisions (the "
-        "recorded mix-weights plan family, in the R7 window); the "
-        "piece regex is the one the recorded token_count_bpe_regex "
-        "oracle proves cross-engine.  R8-window candidate",
-    ),
-    "documents_pdf_text_ingest": (
-        "documents_warc_ingest",
-        "identical lane shape (in the R7 window): applyInPandas shard "
-        "build → binfiles sink → binaryFile → strict mapInPandas parse "
-        "→ checksum aggregate; the PDF codec itself is pinned by "
-        "tests/test_pdf.py.  R8-window candidate",
-    ),
-    "shard_rendezvous_assign": (
-        "dedup_keep_best",
-        "window-argmax-per-key plan family (r5-recorded) over a "
-        "generated candidate set; the minimal-movement property is "
-        "unit-pinned against a direct hash re-derivation.  R8-window "
-        "candidate",
-    ),
-    "part_pareto_frontier": (
-        "sessions_concurrency_peak",
-        "distributed-prefix plan family (range partition + local window "
-        "+ broadcast per-partition offsets, in the R7 window) with max "
-        "in place of sum; skyline semantics unit-pinned against a "
-        "brute-force domination check.  R8-window candidate",
-    ),
-    "customer_record_linkage": (
-        "docs_sorted_neighborhood_pairs",
-        "blocked candidate-pair generation + per-pair scalar scoring + "
-        "grouped census (the recorded bounded-pair plan family); "
-        "Fellegi–Sunter band thresholds unit-pinned on controlled "
-        "record pairs.  R8-window candidate",
-    ),
-    "mmr_diversified_topk": (
-        "ann_cosine_topk",
-        "broadcast-query scored scan + TakeOrderedAndProject shortlist "
-        "(the recorded exact-ANN plan family); the greedy MMR step runs "
-        "on the bounded shortlist and its redundancy suppression is "
-        "unit-pinned on a planted near-duplicate pool.  R8-window "
-        "candidate",
-    ),
-    "substring_denylist_scan": (
-        "denylist_scrub_report",
-        "broadcast-lexicon map-only policy scan + census (promoted to "
-        "the R7 window); the increment — the substring occurrence "
-        "identity — is unit-pinned on literal strings.  R8-window "
-        "candidate",
-    ),
-    "epoch_shuffle_order": (
-        "doc_fingerprint",
-        "closed-form per-row integer hashing, map-only over the corpus "
-        "(r1-recorded); the census aggregate that PROVES the bijection "
-        "is the increment, unit-pinned over a full dense id domain in "
-        "tests/test_llm_ops14.py.  R8-window candidate",
-    ),
-    "arrow_ipc_roundtrip": (
-        "documents_avro_roundtrip",
-        "write-format → read-format → checksum lane through the same "
-        "Python DataSource extension point and two-phase tmp+rename "
-        "commit (in the R7 window); the Arrow RecordBatch passthrough "
-        "is the increment, pinned by tests/test_arrow_ipc.py including "
-        "abort-leaves-nothing.  R8-window candidate",
-    ),
-    "documents_sqlite_ingest": (
-        "documents_warc_ingest",
-        "identical lane shape (in the R7 window): applyInPandas shard "
-        "build → binfiles sink → binaryFile → strict mapInPandas parse "
-        "→ checksum aggregate; the stdlib-sqlite3 codec's strict-"
-        "failure behavior is pinned in tests/test_sqlite_lane.py.  "
-        "R8-window candidate",
-    ),
-    "mojibake_repair_report": (
-        "text_nfc_normalize_report",
-        "inject-transform-verify lane through an arrow-batched "
-        "stdlib-codec UDF (in the R7 window); the double-encoding "
-        "repair decision table is unit-pinned in "
-        "tests/test_llm_ops15.py.  R8-window candidate",
-    ),
-    "script_mix_report": (
-        "pii_scrub_report",
-        "deterministic injection + RE2-portable regex detection census "
-        "(in the R7 window); the code-point-range semantics are pinned "
-        "on literal strings in tests/test_llm_ops15.py.  R8-window "
-        "candidate",
-    ),
-    "bpe_encode_apply": (
-        "bpe_second_merge",
-        "the recorded iterate-and-apply BPE plan family (r6 gate); the "
-        "increment — boundary-safe multi-merge application via "
-        "delimiter doubling — is unit-pinned on adversarial symbol "
-        "sequences in tests/test_llm_ops16.py.  R8-window candidate",
-    ),
-    "events_small_file_compaction": (
-        "documents_shard_export",
-        "controlled-fan-out file write + re-read verification lane (r6 "
-        "gate); compaction's row/value preservation and real-directory "
-        "file counts are what the oracle pins.  R8-window candidate",
-    ),
-    "orders_benford_audit": (
-        "orders_lineitem_dq_audit",
-        "grouped-count DQ census against constant expectation rows (r6 "
-        "gate); the integer digit extraction and literal Benford "
-        "constants are pinned in tests/test_analytics27.py.  R8-window "
-        "candidate",
-    ),
-    "multimodal_goertzel_tone": (
-        "multimodal_decode",
-        "real-codec Arrow decode lane mirrored by a doc_id-arithmetic "
-        "oracle (r4 gate); the integer Goertzel fold's cross-engine "
-        "agreement and the closed-form-vs-real-decode sample "
-        "equivalence are pinned in tests/test_llm_ops17.py.  R8-window "
-        "candidate",
-    ),
-    "lineitem_corr_matrix": (
-        "orders_profile_report",
-        "single-pass multi-aggregate profiling census (promoted to the "
-        "R7 window); the fixed-shape double arithmetic over exact "
-        "integer statistics is pinned against numpy in "
-        "tests/test_analytics27.py.  R8-window candidate",
-    ),
-    "events_cusum_drift": (
-        "sessions_concurrency_peak",
-        "the recorded distributed-prefix plan family (in the R7 "
-        "window), run twice over one pinned ordering (running sum, "
-        "then running min); the max-plus identity and planted-shift "
-        "detection are pinned in tests/test_analytics27.py.  "
-        "R8-window candidate",
-    ),
-}
-
-# HISTORICAL — the r5/r6 delegation set, kept for the ledger (these 24
-# ran r5–r6 under local-oracle-only verification with the named
-# driver-proven twin; promoted wholesale in r7).
-R6_DELEGATED: dict[str, tuple[str, str]] = {
-    "orders_priority_rollup": (
-        "docs_grouping_sets",
-        "GROUP BY ROLLUP shape; grouping-set execution recorded via the "
-        "CUBE gate and pinned by the r5 grouping-sets gate",
-    ),
-    "events_sliding_window_rollup": (
-        "events_incremental_rollup",
-        "overlapping tumbling windows = the same explode->agg rollup path",
-    ),
-    "events_interarrival_stats": (
-        "events_type_transitions",
-        "lag()-window + grouped agg, same one-shuffle partitioned-lag plan",
-    ),
-    "events_trailing_hour_peak": (
-        "events_peak_window",
-        "RANGE-frame running window, same frame machinery",
-    ),
-    "events_active_day_streaks": (
-        "events_session_bookends",
-        "gaps-and-islands via row_number difference, the sessionization "
-        "window shape recorded since r2",
-    ),
-    "orders_monthly_seasonality": (
-        "events_incremental_rollup",
-        "calendar-bucket grouped agg + window over the bucket table",
-    ),
-    "docs_explode_outer_census": (
-        "events_value_unpivot",
-        "explode_outer->agg; null-preserving expand path shared with the "
-        "unpivot gate and the postings explode",
-    ),
-    "events_ewma_dyadic": (
-        "sessions_concurrency_peak",
-        "range-partitioned running recurrence (prefix-scan recipe); the "
-        "peak gate drives the same distributed prefix machinery",
-    ),
-    "doc_shingle_novelty": (
-        "passage_dedup_exact",
-        "sliding-window hash explode + first-occurrence grouping",
-    ),
-    "token_cosine_pairs": (
-        "minhash_jaccard_verified",
-        "capped-candidate scoring join, scalar similarity on pairs",
-    ),
-    "doc_containment_pairs": (
-        "minhash_jaccard_verified",
-        "same capped LSH candidates, asymmetric score instead of Jaccard",
-    ),
-    "docs_levenshtein_verify": (
-        "minhash_jaccard_verified",
-        "same capped candidates scored with builtin levenshtein()",
-    ),
-    "dedup_threshold_sweep": (
-        "lsh_band_selectivity",
-        "parameter sweep = explode thresholds over the verified-pair table",
-    ),
-    "denylist_scrub_report": (
-        "quality_filter_funnel",
-        "broadcast-lexicon map-only scan + funnel counts",
-    ),
-    "cms_join_size_estimate": (
-        "hll_sketch_merge",
-        "mergeable-sketch partial-agg path; CMS registers recorded via "
-        "cms_heavy_hitters (r4)",
-    ),
-    "ann_ivfpq_rerank": (
-        "ann_ivfpq_adc",
-        "stage 1 is exactly the recorded ADC path; rerank adds one "
-        "candidate-bounded exact-score join (the ann_cosine_topk shape)",
-    ),
-    "customer_k_anonymity_ladder": (
-        "docs_grouping_sets",
-        "multi-granularity groupBy ladder = grouping-sets execution",
-    ),
-    "orders_profile_report": (
-        "dataset_card_stats",
-        "per-column profiling aggregates in one pass, same plan family",
-    ),
-    "embedding_triplet_mining": (
-        "knn_graph_ivf",
-        "IVF-blocked scored-neighbor joins; mining = a filter over the "
-        "same bounded pair stage",
-    ),
-    "events_approx_quantile_check": (
-        "hist_quantile_sketch",
-        "approx-quantile vs exact two-pass; sketch path recorded r4",
-    ),
-    "docs_sorted_neighborhood_pairs": (
-        "events_type_transitions",
-        "sort + bounded lead()-window pair generation, the partitioned-"
-        "lag plan; pair scoring shared with the LSH verify stage",
-    ),
-    "lang_id_confusion": (
-        "temperature_mix_weights",
-        "crosstab-style two-key grouped counts over the lang-id scan "
-        "(lang_id_stopwords recorded r4)",
-    ),
-    "events_type_drift_chi2": (
-        "temperature_mix_weights",
-        "grouped counts + broadcast scalar totals + DECIMAL(28,9) "
-        "quantized-term summation — the recorded mix-weights plan family; "
-        "the drift-specific machinery (distributed prefix pass) is pinned "
-        "by the events_value_ks_drift gate",
-    ),
-    "events_drift_timeline": (
-        "temperature_mix_weights",
-        "two grouped aggs + equi-joins with the same DECIMAL(28,9) "
-        "quantized-term summation; per-pair chi2 arithmetic identical to "
-        "events_type_drift_chi2, re-keyed by a UNION ALL (the explode->agg "
-        "shape recorded across the unpivot/rollup gates)",
-    ),
-}
-
-
-# -- Round-8 window accounting ----------------------------------------------
-# R8_PROMOTED (26) + R8_TOUCHED (15) + CHAIN_GATE (1) = 42 pinned slots;
-# R8_NEW grows as round-8 operators register, up to the 50-slot budget.
-# Queries registered past the budget join DELEGATED with a driver-proven
-# twin and become R9-window candidates.
-
-
-def apply_rotation(queries: dict) -> None:
-    """Override per-call ``gated=`` flags with the pinned window.
-
-    Mutates ``queries`` in place (Query is frozen — entries are replaced).
-    Raises if a pinned name is missing from the registry so a typo in the
-    window list fails loudly at import, not silently at gate time.
-    """
-    import dataclasses
-
-    if ACTIVE_WINDOW is None:
-        return
-    missing = ACTIVE_WINDOW - queries.keys()
-    if missing:
-        raise KeyError(
-            f"rotation window names not in registry: {sorted(missing)}"
-        )
-    for name, q in list(queries.items()):
-        want = name in ACTIVE_WINDOW
-        if q.gated != want:
-            queries[name] = dataclasses.replace(q, gated=want)

@@ -35,9 +35,6 @@ may differ across engines and these outputs are hash-compared bit-for-bit.
 
 Reference parity note: the reference (algorand/conduit-cockroachdb) has no
 sketch plane; this is part of the beyond-reference training-data surface.
-
-Registered gated=False (driver window full this round); local-oracle swept;
-r5 rotation candidates.
 """
 
 from __future__ import annotations
@@ -138,9 +135,7 @@ def _summary_sql(group: str = "") -> str:
     return f"SELECT {group}{',' if group else ''} {cols}"
 
 
-# the global events.event_id sketch summary — shared verbatim by
-# hll_distinct_sketch and the streaming merge gate (streaming/events.py),
-# whose register-wise-max compaction must land on the identical sketch
+# the global events.event_id sketch summary (hll_distinct_sketch)
 HLL_GLOBAL_ORACLE = f"""
     WITH md AS (
         SELECT md5(CAST(event_id AS VARCHAR)) AS m FROM events
@@ -247,7 +242,6 @@ def hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "costs nothing regardless of data size; merged == direct-global is "
     "test-pinned.  Same exact-integer register discipline as "
     "hll_distinct_sketch",
-    gated=False,
 )
 def hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")

@@ -19,6 +19,29 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: upper bound on the default driver heap
+MAX_DRIVER_HEAP_MB = 16 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap for ``spark.driver.memory`` and ``-Xms``: half of the
+    host's ``MemAvailable``, capped at 16g, so the committed and
+    pre-touched heap always fits the machine.  ``SPARKROACH_DRIVER_MEM``
+    overrides it.  Without a readable ``MemAvailable`` the cap applies."""
+    override = os.environ.get("SPARKROACH_DRIVER_MEM")
+    if override:
+        return override
+    mb = MAX_DRIVER_HEAP_MB
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    mb = min(mb, int(line.split()[1]) // 1024 // 2)
+                    break
+    except OSError:
+        pass
+    return f"{mb}m"
+
 
 def get_spark(
     app_name: str = "sparkroach",
@@ -30,6 +53,12 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    driver_mem = default_driver_memory()
+    extra_conf = dict(extra_conf or {})
+    java_opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
+    caller_opts = extra_conf.pop("spark.driver.extraJavaOptions", "")
+    if caller_opts:
+        java_opts = f"{java_opts} {caller_opts}"
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -78,7 +107,7 @@ def get_spark(
         # silent-null arithmetic edges; keep consistent.
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", os.environ.get("SPARKROACH_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARKROACH_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # Commit + pre-touch the whole heap at JVM start (-Xms = -Xmx,
         # AlwaysPreTouch).  Root-caused in r9 (OPTIMIZATION_r09.md §JVM
         # heap pre-touch): on a freshly booted VM, first-touch page faults
@@ -91,13 +120,10 @@ def get_spark(
         # work) and leaves steady-state execution fault-free.  Standard
         # JVM practice for latency-sensitive services; same flags apply
         # to executors in cluster deployments (set via
-        # spark.executor.extraJavaOptions there).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Xms%s -XX:+AlwaysPreTouch"
-            % os.environ.get("SPARKROACH_DRIVER_MEM", "16g"),
-        )
+        # spark.executor.extraJavaOptions there).  A caller's own
+        # extraJavaOptions are appended, not dropped.
+        .config("spark.driver.extraJavaOptions", java_opts)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

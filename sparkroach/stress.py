@@ -431,7 +431,6 @@ ANN_QUERIES = (
     "ann_ivfpq_adc",
     "ann_ivfpq_rerank",
     "knn_graph_ivf",
-    "ann_nsw_beam_search",  # r8: graph-based ANN over the kNN adjacency
 )
 
 # subset value-verified against the same DuckDB oracles the driver gate
@@ -1181,365 +1180,6 @@ def run_spans(spark, sf_dir: str) -> dict:
     return out
 
 
-def run_ahash(spark, n: int) -> dict:
-    """Image-dedup plane at stress scale (SCALE.md §16).
-
-    The gate (multimodal_image_ahash_pairs) proves correctness of the
-    64-bit integer aHash on the tile-exact corpus; the stress question
-    is the plane's behavior at 100k images through a REAL lossy codec,
-    and the measured value of each named dial:
-
-    - decode+hash is map-only and linear (measured wall);
-    - the band-bucket join survives a 10k-identical-image flood only
-      because of the bucket cap (the LSH cap trade, measured: flood
-      recovery degrades by design, organic groups recover);
-    - perceptual robustness: near-dups are NOT byte-identical — each
-      group member perturbs a 2x2 pixel patch and every block carries
-      a gradient texture, so the whole image goes through genuine DCT
-      quantization noise;
-    - HASH RICHNESS is measured, not asserted: the same corpus is
-      hashed three ways — a8 (the gate's 64-bit integer aHash), a16
-      (256-bit grid-16 aHash, the 'wider hash' dial), ph (64-bit DCT
-      pHash) — and each variant reports its threshold ceiling, capped
-      recall/precision, and the two-band split-escalation route.
-
-    Corpus: FLOOD identical images (one template), then groups of
-    GROUP images — md5-derived tile patterns + per-group gradient, all
-    dims multiples of 16 so every variant hashes the same pixels.
-    Ground truth is group membership.
-    """
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    from sparkroach.queries.llm_ops10 import _AHASH_CAP
-
-    FLOOD = min(10_000, n // 10)
-    GROUP = 5
-    VARIANTS = {"a8": (4, 8), "a16": (16, 32), "ph": (4, 8)}  # bands, T
-    out: dict = {
-        "n_images": n,
-        "params": {
-            "flood": FLOOD,
-            "group": GROUP,
-            "cap": _AHASH_CAP,
-            "variants": {
-                k: {"bands": b, "hamming_t": t}
-                for k, (b, t) in VARIANTS.items()
-            },
-        },
-    }
-
-    all_cols = [
-        f"{v}{k}" for v, (nb, _) in VARIANTS.items() for k in range(nb)
-    ]
-
-    def synth_and_hash(batches):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        from sparkroach.functions.ahash import (
-            ahash_bands_grid,
-            phash_bands,
-        )
-        from sparkroach.functions.jpeg import decode_jpeg, encode_jpeg
-
-        def tile_v(g: int, tx: int, ty: int) -> int:
-            return hashlib.md5(f"{g},{tx},{ty}".encode()).digest()[0]
-
-        for pdf in batches:
-            rows = {"media_id": [], "group_id": []}
-            for c in all_cols:
-                rows[c] = []
-            for i in pdf["id"]:
-                i = int(i)
-                if i < FLOOD:
-                    g, m = -1, i
-                    w = h = 16
-                    base = 999_999_937  # one template pattern
-                else:
-                    g = (i - FLOOD) // GROUP
-                    m = (i - FLOOD) % GROUP
-                    w = 16 * (1 + g % 2)
-                    h = 16 * (1 + (g // 2) % 2)
-                    base = g
-                img = np.zeros((h, w, 3), np.uint8)
-                for ty in range(h // 8):
-                    for tx in range(w // 8):
-                        img[
-                            ty * 8 : ty * 8 + 8, tx * 8 : tx * 8 + 8, :
-                        ] = tile_v(base, tx, ty)
-                # per-group gradient texture: without it the tile-
-                # constant corpus yields low-entropy hashes, and every
-                # block becomes genuinely lossy under quantization
-                gd = hashlib.md5(f"grad,{base}".encode()).digest()
-                ax, ay = gd[0] % 5 + 1, gd[1] % 5 + 1
-                ys, xs = np.mgrid[0:h, 0:w]
-                grad = ((xs * ax + ys * ay) // 4) % 33
-                img = np.uint8(
-                    np.clip(
-                        img.astype(np.int64) + grad[..., None], 0, 255
-                    )
-                )
-                if g >= 0 and m > 0:
-                    # 2x2 pixel patch perturbation per member
-                    px = (m * 5) % (w - 2)
-                    py = (m * 3) % (h - 2)
-                    patch = img[py : py + 2, px : px + 2, :].astype(
-                        np.int64
-                    )
-                    img[py : py + 2, px : px + 2, :] = np.uint8(
-                        np.clip(patch + 80, 0, 255)
-                    )
-                rgb = decode_jpeg(encode_jpeg(img))["rgb"]
-                hs = {
-                    "a8": ahash_bands_grid(rgb, 8),
-                    "a16": ahash_bands_grid(rgb, 16),
-                    "ph": phash_bands(rgb),
-                }
-                rows["media_id"].append(i)
-                rows["group_id"].append(g)
-                for v, bands in hs.items():
-                    for k, bv in enumerate(bands):
-                        rows[f"{v}{k}"].append(bv)
-            yield pd.DataFrame(rows)
-
-    schema = "media_id long, group_id long, " + ", ".join(
-        f"{c} long" for c in all_cols
-    )
-    t0 = time.time()
-    hx = (
-        spark.range(n)
-        .repartition(64)
-        .mapInPandas(synth_and_hash, schema)
-        .localCheckpoint()
-    )
-    n_hashed = hx.count()
-    out["hash_stage"] = {
-        "wall_s": round(time.time() - t0, 2),
-        "images": n_hashed,
-        "skew": _partition_skew(hx),
-    }
-
-    def eval_variant(prefix: str, n_bands: int, t_ham: int) -> dict:
-        res: dict = {}
-        cols = [f"{prefix}{k}" for k in range(n_bands)]
-        ha = hx.select(
-            F.col("media_id").alias("media_a"),
-            F.col("group_id").alias("g_a"),
-            *[F.col(c).alias(f"xa_{k}") for k, c in enumerate(cols)],
-        )
-        hb = hx.select(
-            F.col("media_id").alias("media_b"),
-            F.col("group_id").alias("g_b"),
-            *[F.col(c).alias(f"xb_{k}") for k, c in enumerate(cols)],
-        )
-        hamming = sum(
-            F.bit_count(F.expr(f"xa_{k} ^ xb_{k}"))
-            for k in range(n_bands)
-        )
-
-        # threshold ceiling: true same-group pairs within t after codec
-        org = hx.where(F.col("group_id") >= 0)
-        tp = (
-            org.alias("x")
-            .join(org.alias("y"), "group_id")
-            .where(F.col("x.media_id") < F.col("y.media_id"))
-            .select(
-                *[
-                    F.col(f"x.{c}").alias(f"xa_{k}")
-                    for k, c in enumerate(cols)
-                ],
-                *[
-                    F.col(f"y.{c}").alias(f"xb_{k}")
-                    for k, c in enumerate(cols)
-                ],
-            )
-            .withColumn("hamming", hamming)
-            .agg(
-                F.count("*").alias("n"),
-                F.sum((F.col("hamming") <= t_ham).cast("long")).alias(
-                    "within"
-                ),
-            )
-            .collect()[0]
-        )
-        res["threshold_ceiling"] = (
-            round(tp.within / tp.n, 4) if tp.n else None
-        )
-
-        bands = hx.select(
-            "media_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).alias("band_idx"),
-                            F.col(c).alias("band_val"),
-                        )
-                        for k, c in enumerate(cols)
-                    ]
-                )
-            ).alias("bv"),
-        ).select("media_id", "bv.band_idx", "bv.band_val")
-
-        cen = (
-            bands.groupBy("band_idx", "band_val")
-            .agg(F.count("*").alias("sz"))
-            .agg(
-                F.count("*").alias("n_buckets"),
-                F.max("sz").alias("max_bucket"),
-            )
-            .collect()[0]
-        )
-        res["band_census"] = {
-            "n_buckets": cen.n_buckets,
-            "max_bucket": cen.max_bucket,
-        }
-
-        rk = Window.partitionBy("band_idx", "band_val").orderBy(
-            "media_id"
-        )
-        ranked = bands.withColumn(
-            "rk", F.row_number().over(rk)
-        ).localCheckpoint()
-
-        def score(cand, label: str, wall: float) -> None:
-            pairs = (
-                cand.join(ha, "media_a")
-                .join(hb, "media_b")
-                .withColumn("hamming", hamming)
-                .where(F.col("hamming") <= t_ham)
-                .localCheckpoint()
-            )
-            n_pairs = pairs.count()
-            prec = pairs.agg(
-                F.count("*").alias("n"),
-                F.sum((F.col("g_a") == F.col("g_b")).cast("long")).alias(
-                    "same"
-                ),
-            ).collect()[0]
-            hit = pairs.where(F.col("g_a") == F.col("g_b"))
-            hits = (
-                hit.select(F.col("media_a").alias("media_id"))
-                .unionAll(hit.select(F.col("media_b").alias("media_id")))
-                .distinct()
-                .withColumn("hit", F.lit(1))
-            )
-            rec = (
-                hx.select("media_id", "group_id")
-                .join(hits, "media_id", "left")
-                .withColumn(
-                    "bucket",
-                    F.when(F.col("group_id") < 0, "flood").otherwise(
-                        "organic"
-                    ),
-                )
-                .groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias(
-                        "recovered"
-                    ),
-                )
-                .collect()
-            )
-            res[label] = {
-                "wall_s": round(time.time() - wall, 2),
-                "n_verified_pairs": n_pairs,
-                "precision": (
-                    round(prec.same / prec.n, 4) if prec.n else None
-                ),
-                "doc_recovery": {
-                    r.bucket: (
-                        round(r.recovered / r.n, 4) if r.n else None
-                    )
-                    for r in rec
-                },
-            }
-
-        # capped single-band candidates (the gate's plan)
-        t0 = time.time()
-        base_capped = ranked.where(F.col("rk") <= _AHASH_CAP)
-        ab = base_capped.select(
-            "band_idx", "band_val", F.col("media_id").alias("media_a")
-        )
-        bb = base_capped.select(
-            "band_idx", "band_val", F.col("media_id").alias("media_b")
-        )
-        base_cand = (
-            ab.join(bb, ["band_idx", "band_val"])
-            .where(F.col("media_a") < F.col("media_b"))
-            .select("media_a", "media_b")
-            .distinct()
-        )
-        score(base_cand, "capped", t0)
-
-        # split escalation: over-cap single-band buckets re-key on
-        # (band_i, band_j) pairs, cap re-applied per joint bucket
-        t0 = time.time()
-        sizes = bands.groupBy("band_idx", "band_val").agg(
-            F.count("*").alias("sz")
-        )
-        hot = (
-            bands.join(sizes, ["band_idx", "band_val"])
-            .where(F.col("sz") > _AHASH_CAP)
-            .select("media_id", "band_idx", "band_val")
-            .join(hx.select("media_id", *cols), "media_id")
-        )
-        two = hot.select(
-            "media_id",
-            "band_idx",
-            "band_val",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.col(c).alias("vj"),
-                        )
-                        for j, c in enumerate(cols)
-                    ]
-                )
-            ).alias("s"),
-        ).where(F.col("s.j") != F.col("band_idx")).select(
-            "media_id",
-            "band_idx",
-            "band_val",
-            F.col("s.j").alias("j"),
-            F.col("s.vj").alias("vj"),
-        )
-        rk2 = Window.partitionBy(
-            "band_idx", "band_val", "j", "vj"
-        ).orderBy("media_id")
-        two_capped = two.withColumn(
-            "rk", F.row_number().over(rk2)
-        ).where(F.col("rk") <= _AHASH_CAP)
-        a2 = two_capped.select(
-            "band_idx", "band_val", "j", "vj",
-            F.col("media_id").alias("media_a"),
-        )
-        b2 = two_capped.select(
-            "band_idx", "band_val", "j", "vj",
-            F.col("media_id").alias("media_b"),
-        )
-        esc_cand = (
-            base_cand.unionAll(
-                a2.join(b2, ["band_idx", "band_val", "j", "vj"])
-                .where(F.col("media_a") < F.col("media_b"))
-                .select("media_a", "media_b")
-            )
-            .distinct()
-        )
-        score(esc_cand, "split_escalation", t0)
-        return res
-
-    for v, (nb, t_ham) in VARIANTS.items():
-        out[v] = eval_variant(v, nb, t_ham)
-    return out
-
-
 def run_formats(spark, sf_dir: str) -> dict:
     """Format-lane throughput at stress scale (SCALE.md §15): write the
     100k-doc corpus through each source/sink lane, read it back with a
@@ -1972,247 +1612,6 @@ def run_linkage(spark, n: int, out_dir: str) -> dict:
     return out
 
 
-def run_codecs(spark, n_images: int) -> dict:
-    """Codec-lane throughput (r8): encode+decode n synthetic media items
-    through each REAL from-scratch codec's mapInPandas lane — the
-    byte-level cost of the multimodal decode plane, measured.  Each lane
-    is a Spark job over a ``spark.range`` id column (no parquet), so the
-    number is pure codec + Arrow-batch cost."""
-    from pyspark.sql import functions as F
-
-    from sparkroach._shiplib import ensure_shipped
-
-    ensure_shipped(spark)
-    docs = spark.range(n_images).select(F.col("id").alias("doc_id"))
-    out: dict = {"n_images": n_images}
-
-    def lane(name, synth, feats, byte_col="payload"):
-        t0 = time.time()
-        media = synth(docs).localCheckpoint(eager=True)
-        enc_s = time.time() - t0
-        nbytes = media.agg(
-            F.sum(F.octet_length(byte_col)).alias("b")
-        ).collect()[0]["b"]
-        t0 = time.time()
-        rows = feats(media).count()
-        dec_s = time.time() - t0
-        out[name] = {
-            "rows": rows,
-            "payload_mb": round(nbytes / 1e6, 2),
-            "encode_s": round(enc_s, 2),
-            "decode_s": round(dec_s, 2),
-            "decode_items_per_s": round(rows / dec_s, 1) if dec_s else None,
-        }
-
-    from sparkroach.functions.g711 import g711_features, synthesize_g711_media
-    from sparkroach.functions.gif import gif_features, synthesize_gif_media
-    from sparkroach.functions.jpeg import jpeg_features, synthesize_jpeg_media
-    from sparkroach.functions.png import png_features, synthesize_png_media
-    from sparkroach.functions.qoi import qoi_features, synthesize_qoi_media
-    from sparkroach.functions.rice import rice_features, synthesize_rice_media
-    from sparkroach.functions.tiff import synthesize_tiff_media, tiff_features
-
-    lane("png", synthesize_png_media, png_features)
-    lane("gif", synthesize_gif_media, gif_features)
-    lane("jpeg", synthesize_jpeg_media, jpeg_features)
-    lane("g711", synthesize_g711_media, g711_features)
-    lane("qoi", synthesize_qoi_media, qoi_features)
-    lane("tiff", synthesize_tiff_media, tiff_features)
-    lane("rice", synthesize_rice_media, rice_features)
-
-    # byte codecs over synthesized word-soup text (the documents-table
-    # shape): per-doc compress in one mapInPandas stage, strict
-    # decompress+hash in the next — identical to the gate lanes
-    words = (
-        "array('scan','join','window','merge','batch','spark','hash',"
-        "'sort')"
-    )
-    docs_txt = docs.selectExpr(
-        "doc_id",
-        f"concat_ws(' ', transform(sequence(1, 60), "
-        f"i -> element_at({words}, "
-        f"CAST((doc_id * 7 + i * 13) % 8 AS INT) + 1))) AS text",
-    )
-
-    def text_lane(name, compress, decompress):
-        t0 = time.time()
-        comp = compress(docs_txt).localCheckpoint(eager=True)
-        enc_s = time.time() - t0
-        nbytes = comp.agg(
-            F.sum(F.octet_length("payload")).alias("b")
-        ).collect()[0]["b"]
-        t0 = time.time()
-        rows = decompress(comp).count()
-        dec_s = time.time() - t0
-        out[name] = {
-            "rows": rows,
-            "payload_mb": round(nbytes / 1e6, 2),
-            "encode_s": round(enc_s, 2),
-            "decode_s": round(dec_s, 2),
-            "decode_items_per_s": round(rows / dec_s, 1) if dec_s else None,
-        }
-
-    from sparkroach.functions import bwt as _bwt
-    from sparkroach.functions import lz4block as _lz4
-
-    text_lane("lz4", _lz4.compress_documents, _lz4.decompress_features)
-    text_lane("bwt", _bwt.compress_documents, _bwt.decompress_features)
-    return out
-
-
-def run_rankstats(spark, n_rows: int) -> dict:
-    """Exact rank statistics at volume (SCALE.md §23): Mann-Whitney U
-    and Spearman's ρ over ``n_rows`` synthesized rows, CROSS-ENGINE
-    VERIFIED — DuckDB recomputes the identical statistics from the
-    identical arithmetic synthesis and every exact integer (and the one
-    fixed-shape double each) must agree bit-for-bit.  The point: the
-    distributed midrank machinery (grouped distinct values → prefix
-    scan → value-keyed joins) carries EXACT order statistics at any n,
-    where a sort-based rank would shuffle the world."""
-    import duckdb
-
-    from pyspark.sql import functions as F
-
-    from sparkroach.queries.analytics29 import _rank2_table
-
-    out: dict = {"n_rows": n_rows}
-    # planted location shift between the two groups → a real z signal
-    synth_cols = [
-        "id % 2 AS grp",
-        "CAST(((id * 2654435761) % 2147483647) % 40000 "
-        "+ (id % 2) * 300 AS BIGINT) AS v",
-        "CAST(((id * 1103515245) % 2147483647) % 40000 AS BIGINT) AS w",
-    ]
-    synth_sql = ", ".join(synth_cols)
-    rows = spark.range(n_rows).selectExpr(*synth_cols).localCheckpoint(
-        eager=True
-    )
-
-    # -- Mann-Whitney over grp 0 vs 1 on v --------------------------------
-    t0 = time.time()
-    g = rows.groupBy("v").agg(
-        F.count("*").cast("long").alias("cnt"),
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("cnt1"),
-    )
-    r = _rank2_table(g, "v")
-    s = r.agg(
-        F.sum("cnt").cast("long").alias("n"),
-        F.sum("cnt1").cast("long").alias("n1"),
-        F.sum((F.col("cnt1") * F.col("rank2")).cast("decimal(38,0)")).alias(
-            "r1s2"
-        ),
-        F.sum(
-            F.col("cnt").cast("decimal(18,0)") * F.col("cnt") * F.col("cnt")
-            - F.col("cnt")
-        ).alias("ties"),
-    ).collect()[0]
-    mw_wall = time.time() - t0
-    import math
-
-    n, n1 = int(s["n"]), int(s["n1"])
-    n2 = n - n1
-    r1s2, ties = int(s["r1s2"]), int(s["ties"])
-    ud = r1s2 - n1 * (n1 + 1) - n1 * n2
-    m = (n + 1) * n * (n - 1) - ties
-    z = float(ud) / (
-        2.0 * math.sqrt(float(n1 * n2) * float(m) / float(12 * n * (n - 1)))
-    )
-
-    con = duckdb.connect()
-    dn, dn1, dr1s2, dties, dz = con.execute(
-        f"""
-        WITH q AS (SELECT {synth_sql.replace("id", "r.range")}
-                   FROM range(0, {n_rows}) r),
-        g AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS cnt,
-                     CAST(SUM(CASE WHEN grp = 0 THEN 1 ELSE 0 END)
-                          AS BIGINT) AS cnt1
-              FROM q GROUP BY v),
-        r AS (SELECT *, SUM(cnt) OVER (ORDER BY v) AS run FROM g),
-        a AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n,
-                     CAST(SUM(cnt1) AS BIGINT) AS n1,
-                     CAST(SUM(cnt1 * (2 * (run - cnt) + cnt + 1))
-                          AS BIGINT) AS r1s2,
-                     CAST(SUM(CAST(cnt AS HUGEINT) * cnt * cnt - cnt)
-                          AS BIGINT) AS ties
-              FROM r)
-        SELECT n, n1, r1s2, ties,
-               CAST(r1s2 - n1 * (n1 + 1) - n1 * (n - n1) AS DOUBLE)
-               / (2.0 * sqrt(CAST(n1 * (n - n1) AS DOUBLE)
-                             * CAST((n + 1) * n * (n - 1) - ties AS DOUBLE)
-                             / CAST(12 * n * (n - 1) AS DOUBLE)))
-        FROM a
-        """
-    ).fetchone()
-    out["mann_whitney"] = {
-        "wall_s": round(mw_wall, 2),
-        "z": z,
-        "integers_equal": (int(dn), int(dn1), int(dr1s2), int(dties))
-        == (n, n1, r1s2, ties),
-        "z_bit_equal": dz == z,
-    }
-
-    # -- Spearman between v and w ----------------------------------------
-    t0 = time.time()
-    rx = _rank2_table(
-        rows.groupBy("v").agg(F.count("*").cast("long").alias("cnt")), "v"
-    ).select("v", (F.col("rank2") - (n_rows + 1)).alias("cx"))
-    ry = _rank2_table(
-        rows.groupBy("w").agg(F.count("*").cast("long").alias("cnt")), "w"
-    ).select("w", (F.col("rank2") - (n_rows + 1)).alias("cy"))
-    sp = (
-        rows.join(rx, "v")
-        .join(ry, "w")
-        .agg(
-            F.sum((F.col("cx") * F.col("cy")).cast("decimal(38,0)")).alias(
-                "sxy"
-            ),
-            F.sum((F.col("cx") * F.col("cx")).cast("decimal(38,0)")).alias(
-                "sxx"
-            ),
-            F.sum((F.col("cy") * F.col("cy")).cast("decimal(38,0)")).alias(
-                "syy"
-            ),
-        )
-        .collect()[0]
-    )
-    sp_wall = time.time() - t0
-    sxy, sxx, syy = int(sp["sxy"]), int(sp["sxx"]), int(sp["syy"])
-    rho = float(sxy) / (math.sqrt(float(sxx)) * math.sqrt(float(syy)))
-    dsxy, dsxx, dsyy, drho = con.execute(
-        f"""
-        WITH q AS (SELECT {synth_sql.replace("id", "r.range")}
-                   FROM range(0, {n_rows}) r),
-        gx AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS cnt FROM q GROUP BY v),
-        rx AS (SELECT v, 2 * (SUM(cnt) OVER (ORDER BY v) - cnt) + cnt + 1
-                          AS rank2 FROM gx),
-        gy AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM q GROUP BY w),
-        ry AS (SELECT w, 2 * (SUM(cnt) OVER (ORDER BY w) - cnt) + cnt + 1
-                          AS rank2 FROM gy),
-        c AS (SELECT rx.rank2 - {n_rows + 1} AS cx,
-                     ry.rank2 - {n_rows + 1} AS cy
-              FROM q JOIN rx ON rx.v = q.v JOIN ry ON ry.w = q.w),
-        s AS (SELECT CAST(SUM(cx * cy) AS BIGINT) AS sxy,
-                     CAST(SUM(cx * cx) AS BIGINT) AS sxx,
-                     CAST(SUM(cy * cy) AS BIGINT) AS syy
-              FROM c)
-        SELECT sxy, sxx, syy,
-               CAST(sxy AS DOUBLE)
-               / (sqrt(CAST(sxx AS DOUBLE)) * sqrt(CAST(syy AS DOUBLE)))
-        FROM s
-        """
-    ).fetchone()
-    out["spearman"] = {
-        "wall_s": round(sp_wall, 2),
-        "rho": rho,
-        "integers_equal": (int(dsxy), int(dsxx), int(dsyy))
-        == (sxy, sxx, syy),
-        "rho_bit_equal": drho == rho,
-    }
-    return out
-
-
 def run_micro(spark) -> dict:
     """Micro-stress for the wave-8+ operator plans (SCALE.md §19):
     synthesized inputs from ``spark.range`` expressions (no parquet),
@@ -2365,28 +1764,10 @@ def main() -> None:
         "ground truth) on the dedup corpus",
     )
     ap.add_argument(
-        "--ahash", action="store_true",
-        help="run the image-dedup (aHash) plane stress: synthesize+"
-        "encode+decode+hash n images through the real JPEG codec, "
-        "band-bucket census under a 10%% identical-image flood, capped "
-        "pair join, perceptual recall on perturbed near-dups",
-    )
-    ap.add_argument(
-        "--codecs", action="store_true",
-        help="measure codec-lane throughput (PNG/GIF/JPEG/G.711/QOI/TIFF/"
-        "Rice/LZ4/SBWT encode+decode items/s) on --n synthesized items",
-    )
-    ap.add_argument(
         "--micro", action="store_true",
         help="micro-stress the wave-8+ operator plans on synthesized "
         "spark.range inputs: skyline at 10M points, Feistel shuffle at "
         "100M ids, substring scan at 1M docs",
-    )
-    ap.add_argument(
-        "--rankstats", action="store_true",
-        help="exact rank statistics (Mann-Whitney U, Spearman rho) on "
-        "--n synthesized rows, cross-engine bit-equality verified vs "
-        "DuckDB; run at --n 2000000 (the BIGINT-exact guard boundary)",
     )
     ap.add_argument(
         "--linkage", action="store_true",
@@ -2421,7 +1802,7 @@ def main() -> None:
     if n_vecs is None and (args.ann or args.pq_sweep):
         n_vecs = args.n
     report: dict = {}
-    if not (args.ahash or args.linkage or args.micro or args.codecs or args.rankstats):
+    if not (args.linkage or args.micro):
         # (these modes synthesize their own corpora)
         report["synth"] = synthesize(
             args.out, args.n, args.seed, n_vecs=n_vecs, uniform_frac=uniform
@@ -2429,14 +1810,8 @@ def main() -> None:
     spark = get_spark("sparkroach-stress")
     try:
         t0 = time.time()
-        if args.ahash:
-            report.update(run_ahash(spark, args.n))
-        elif args.codecs:
-            report.update(run_codecs(spark, args.n))
-        elif args.micro:
+        if args.micro:
             report.update(run_micro(spark))
-        elif args.rankstats:
-            report.update(run_rankstats(spark, args.n))
         elif args.linkage:
             os.makedirs(args.out, exist_ok=True)
             report.update(run_linkage(spark, args.n, args.out))

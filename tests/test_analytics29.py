@@ -1,14 +1,12 @@
-"""Round-8 wave-4 unit pins: ACF grid algebra and Theil–Sen medians
-against independent numpy references on controlled series."""
+"""Pure-Python pins: the Hilbert-curve codec
+(``sparkroach/functions/hilbert.py``) and the reference estimators
+(ACF grid algebra, Gini, AMS F2, k-core peeling, Theil–Sen) checked
+against independent numpy or closed-form results."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
-
-from sparkroach.queries import QUERIES
-from tests.conftest import SF_SMALL
 
 
 def _acf_ref(x: np.ndarray, k: int) -> float:
@@ -41,31 +39,6 @@ def test_acf_grid_algebra_matches_textbook_estimator():
         )
 
 
-def test_events_minute_acf_gate_matches_numpy(spark):
-    import duckdb
-
-    rows = QUERIES["events_minute_acf"].fn(spark, SF_SMALL).collect()
-    assert [r["lag"] for r in rows] == list(range(1, 9))
-    con = duckdb.connect()
-    mins = con.execute(
-        "SELECT epoch_us(ts::TIMESTAMP) // 60000000 AS t, "
-        "SUM(CAST(round(value*100) AS BIGINT)) AS x "
-        f"FROM read_parquet('{SF_SMALL}/events.parquet') GROUP BY 1"
-    ).fetchall()
-    t0 = min(t for t, _ in mins)
-    t1 = max(t for t, _ in mins)
-    x = np.zeros(t1 - t0 + 1)
-    for t, v in mins:
-        x[t - t0] = v
-    for r in rows:
-        assert r["n_grid"] == len(x)
-        assert r["acf"] == pytest.approx(_acf_ref(x, r["lag"]), abs=1e-9)
-    # a 10-minute-cadence event stream is strongly positively
-    # autocorrelated at lag 0±ε but near-noise by construction here;
-    # just pin the mathematical range
-    assert all(-1.0 <= r["acf"] <= 1.0 for r in rows)
-
-
 def _theil_sen_ref(ts, ys):
     slopes = []
     for i in range(len(ts)):
@@ -84,26 +57,6 @@ def _theil_sen_ref(ts, ys):
     return n_pairs, s6, i6
 
 
-def test_events_hourly_theil_sen_matches_reference(spark):
-    import duckdb
-
-    row = QUERIES["events_hourly_theil_sen"].fn(spark, SF_SMALL).collect()[0]
-    con = duckdb.connect()
-    hrs = con.execute(
-        "SELECT epoch_us(ts::TIMESTAMP) // 3600000000 AS t, "
-        "SUM(CAST(round(value*100) AS BIGINT)) AS y "
-        f"FROM read_parquet('{SF_SMALL}/events.parquet') "
-        "GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    ts = [t for t, _ in hrs]
-    ys = [float(y) for _, y in hrs]
-    n_pairs, s6, i6 = _theil_sen_ref(ts, ys)
-    assert row["n_points"] == len(ts)
-    assert row["n_pairs"] == n_pairs
-    assert row["sen_slope_r6"] == pytest.approx(s6, abs=2e-6)
-    assert row["sen_intercept_r6"] == pytest.approx(i6, abs=2e-6)
-
-
 def _gini_ref(xs):
     xs = sorted(xs)
     n = len(xs)
@@ -117,102 +70,6 @@ def test_gini_identity_edges():
     assert _gini_ref([5, 5, 5, 5]) == 0.0  # uniform
     n = 10
     assert _gini_ref([0] * (n - 1) + [100]) == pytest.approx((n - 1) / n)
-
-
-def test_user_activity_gini_gate_matches_numpy(spark):
-    import duckdb
-
-    row = QUERIES["user_activity_gini"].fn(spark, SF_SMALL).collect()[0]
-    con = duckdb.connect()
-    xs = [
-        r[0]
-        for r in con.execute(
-            "SELECT SUM(CAST(round(value*100) AS BIGINT)) FROM "
-            f"read_parquet('{SF_SMALL}/events.parquet') GROUP BY user_id"
-        ).fetchall()
-    ]
-    assert row["n_users"] == len(xs)
-    assert row["total_cents"] == sum(xs)
-    assert row["gini"] == pytest.approx(_gini_ref(xs), abs=2e-9)
-    assert 0 <= row["gini"] < 1
-
-
-def test_markov_stationary_matches_eigenvector(spark):
-    rows = QUERIES["events_markov_stationary"].fn(spark, SF_SMALL).collect()
-    states = [r["state"] for r in rows]
-    assert len(states) == 5
-    # converged: the quantized fixed point stopped moving
-    assert all(r["last_delta_q8"] <= 1 for r in rows)
-    # and sits on the true stationary eigenvector of the float matrix
-    import duckdb
-
-    con = duckdb.connect()
-    cnt = con.execute(
-        "WITH p AS (SELECT user_id, event_type, lead(event_type) OVER ("
-        "PARTITION BY user_id ORDER BY epoch_us(ts::TIMESTAMP), event_id"
-        ") AS nxt FROM "
-        f"read_parquet('{SF_SMALL}/events.parquet')) "
-        "SELECT event_type, nxt, COUNT(*) FROM p WHERE nxt IS NOT NULL "
-        "GROUP BY 1, 2"
-    ).fetchall()
-    idx = {s: i for i, s in enumerate(states)}
-    mat = np.zeros((5, 5))
-    for a, b, c in cnt:
-        mat[idx[a], idx[b]] = c
-    mat /= mat.sum(axis=1, keepdims=True)
-    evals, evecs = np.linalg.eig(mat.T)
-    pi = np.real(evecs[:, np.argmax(np.real(evals))])
-    pi = pi / pi.sum()
-    for r in rows:
-        assert r["stationary_q8"] / 1e8 == pytest.approx(
-            pi[idx[r["state"]]], abs=1e-4
-        )
-
-
-def test_events_sax_words_match_python_reference(spark):
-    import duckdb
-
-    rows = QUERIES["events_sax_quantile_words"].fn(spark, SF_SMALL).collect()
-    con = duckdb.connect()
-    hrs = dict(
-        con.execute(
-            "SELECT epoch_us(ts::TIMESTAMP) // 3600000000, "
-            "SUM(CAST(round(value*100) AS BIGINT)) FROM "
-            f"read_parquet('{SF_SMALL}/events.parquet') GROUP BY 1"
-        ).fetchall()
-    )
-    h0 = min(hrs)
-    segs: dict = {}
-    for hr, y in hrs.items():
-        key = ((hr - h0) // 6, (hr - h0) // 24, ((hr - h0) % 24) // 6)
-        segs[key] = segs.get(key, 0) + y
-    ordered = sorted((v, s) for (s, _d, _sl), v in segs.items())
-    n = len(ordered)
-    cuts = [ordered[(k * n + 3) // 4 - 1][0] for k in (1, 2, 3)]
-
-    def sym(v):
-        if v <= cuts[0]:
-            return "a"
-        if v <= cuts[1]:
-            return "b"
-        if v <= cuts[2]:
-            return "c"
-        return "d"
-
-    words: dict = {}
-    for (s, d, sl), v in sorted(segs.items(), key=lambda kv: kv[0][2]):
-        words.setdefault(d, {})[sl] = sym(v)
-    got = {r["day"]: r["word"] for r in rows}
-    assert set(got) == set(words)
-    for d, slots in words.items():
-        assert got[d] == "".join(slots[k] for k in sorted(slots)), d
-    # the alphabet is balanced by construction: each letter covers
-    # roughly a quarter of the segments
-    from collections import Counter
-
-    letters = Counter(c for w in got.values() for c in w)
-    assert set(letters) == {"a", "b", "c", "d"}
-    assert max(letters.values()) <= 2 * min(letters.values())
 
 
 def test_hilbert_curve_reference_properties():
@@ -258,57 +115,6 @@ def test_hilbert_sql_stages_match_reference_exhaustively():
         assert hd == xy2d(x, y) and z == morton(x, y)
 
 
-def test_hilbert_locality_gate_beats_zorder(spark):
-    row = QUERIES["events_hilbert_locality_report"].fn(spark, SF_SMALL).collect()[0]
-    assert row["n_cells"] > 100
-    # the entire point: the Hilbert walk over occupied cells travels
-    # less and lands on grid-adjacent neighbors more often than Z-order
-    assert (
-        row["hilbert_path_manhattan"] < row["zorder_path_manhattan"]
-    ), row
-    assert (
-        row["hilbert_adjacent_pairs"] >= row["zorder_adjacent_pairs"]
-    ), row
-    assert 0 < row["locality_ratio"] < 1
-
-
-def test_lineitem_ols_matches_numpy_least_squares(spark):
-    import duckdb
-
-    row = QUERIES["lineitem_ols_cramer"].fn(spark, SF_SMALL).collect()[0]
-    con = duckdb.connect()
-    data = con.execute(
-        "SELECT CAST(round(l_quantity) AS BIGINT), "
-        "CAST(round(l_discount*100) AS BIGINT), "
-        "CAST(round(l_extendedprice*100) AS BIGINT) FROM "
-        f"read_parquet('{SF_SMALL}/lineitem.parquet')"
-    ).fetchall()
-    x = np.array([r[0] for r in data], dtype=float)
-    z = np.array([r[1] for r in data], dtype=float)
-    y = np.array([r[2] for r in data], dtype=float)
-    a = np.column_stack([np.ones_like(x), x, z])
-    beta = np.linalg.lstsq(a, y, rcond=None)[0]
-    assert row["n_rows"] == len(x)
-    # Cramer over exact integers == numpy LSQ to quantization precision
-    assert row["beta0_q6"] / 1e6 == pytest.approx(beta[0], abs=2e-5)
-    assert row["beta1_q6"] / 1e6 == pytest.approx(beta[1], abs=2e-5)
-    assert row["beta2_q6"] / 1e6 == pytest.approx(beta[2], abs=2e-5)
-    # the quantized fit's residual aggregate is reproducible EXACTLY —
-    # in python ints (a numpy float64 sum already rounds at ~1.5e16)
-    resid = sum(
-        abs(
-            1_000_000 * yi
-            - (
-                row["beta0_q6"]
-                + row["beta1_q6"] * xi
-                + row["beta2_q6"] * zi
-            )
-        )
-        for xi, zi, yi in data
-    )
-    assert row["sae_q6"] == resid
-
-
 def _ams_squares(counts, salt, k=24):
     """Reference AMS estimator squares S_j² for one salt."""
     import hashlib
@@ -346,14 +152,6 @@ def test_ams_estimator_unbiased_mean_and_concentrated_median():
     assert within >= 50
 
 
-def test_events_ams_f2_gate_reports_sane_error(spark):
-    row = QUERIES["events_ams_f2_sketch"].fn(spark, SF_SMALL).collect()[0]
-    assert row["f2_exact"] > 0
-    # single fixed-hash realization: pinned loose (median-of-means with
-    # 6x4 estimators is within a small constant factor w.h.p.)
-    assert row["rel_err"] < 1.5
-
-
 def _peel_ref(edges, k):
     """Reference k-core: peel until fixpoint, return surviving edges."""
     cur = set(edges)
@@ -377,118 +175,6 @@ def test_kcore_reference_semantics():
     lollipop = {(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)}
     assert _peel_ref(lollipop, 2) == {(0, 1), (1, 2), (0, 2)}
     assert _peel_ref(lollipop, 3) == set()
-
-
-def test_dup_graph_kcore_gate_invariants(spark):
-    rows = {r["k"]: r for r in QUERIES["dup_graph_kcore"].fn(spark, SF_SMALL).collect()}
-    assert set(rows) == {2, 3}
-    for r in rows.values():
-        assert r["converged"], "peeling must reach its fixpoint at test SFs"
-    # the density ladder is monotone: the 3-core sits inside the 2-core
-    assert rows[3]["n_core_nodes"] <= rows[2]["n_core_nodes"]
-    assert rows[3]["n_core_edges"] <= rows[2]["n_core_edges"]
-    # and matches the reference peeling on the real verified edge set
-    import duckdb
-
-    from sparkroach.queries.llm_ops import _JACCARD_TAU, _verified_pairs
-
-    edges = {
-        (r["doc_a"], r["doc_b"])
-        for r in _verified_pairs(
-            spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-        )
-        .where(F.col("jaccard") >= _JACCARD_TAU)
-        .collect()
-    }
-    for k in (2, 3):
-        ref = _peel_ref(edges, k)
-        ref_nodes = {n for e in ref for n in e}
-        assert rows[k]["n_core_edges"] == len(ref)
-        assert rows[k]["n_core_nodes"] == len(ref_nodes)
-
-
-def _mw_ref(xs, ys):
-    """Tie-corrected Mann-Whitney z (scipy.stats.mannwhitneyu
-    use_continuity=False convention), independently in numpy."""
-    pooled = np.concatenate([xs, ys])
-    order = np.argsort(pooled, kind="stable")
-    ranks = np.empty(len(pooled))
-    sorted_v = pooled[order]
-    i = 0
-    while i < len(sorted_v):
-        j = i
-        while j < len(sorted_v) and sorted_v[j] == sorted_v[i]:
-            j += 1
-        ranks[order[i:j]] = (i + j + 1) / 2  # midrank, 1-based
-        i = j
-    n1, n2 = len(xs), len(ys)
-    n = n1 + n2
-    r1 = ranks[: n1].sum()
-    u1 = r1 - n1 * (n1 + 1) / 2
-    _, t_counts = np.unique(pooled, return_counts=True)
-    tie = (t_counts.astype(object) ** 3 - t_counts).sum()
-    sigma = np.sqrt(
-        n1 * n2 / 12 * ((n + 1) - tie / (n * (n - 1)))
-    )
-    return u1, (u1 - n1 * n2 / 2) / sigma
-
-
-def test_events_mann_whitney_u_matches_numpy(spark):
-    import duckdb
-
-    row = QUERIES["events_mann_whitney_u"].fn(spark, SF_SMALL).collect()[0]
-    con = duckdb.connect()
-    xs, ys = (
-        np.array(
-            [
-                r[0]
-                for r in con.execute(
-                    "SELECT CAST(round(value*100) AS BIGINT) FROM "
-                    f"read_parquet('{SF_SMALL}/events.parquet') "
-                    f"WHERE event_type = '{t}'"
-                ).fetchall()
-            ]
-        )
-        for t in ("click", "purchase")
-    )
-    u1, z = _mw_ref(xs, ys)
-    assert row["n1"] == len(xs) and row["n2"] == len(ys)
-    assert row["u1_2"] == int(2 * u1)
-    assert row["z"] == pytest.approx(z, abs=1e-9)
-
-
-def test_lineitem_spearman_matches_scipy_convention(spark):
-    import duckdb
-
-    row = QUERIES["lineitem_spearman_corr"].fn(spark, SF_SMALL).collect()[0]
-    con = duckdb.connect()
-    data = con.execute(
-        "SELECT CAST(round(l_quantity*100) AS BIGINT), "
-        "CAST(round(l_extendedprice*100) AS BIGINT) FROM "
-        f"read_parquet('{SF_SMALL}/lineitem.parquet')"
-    ).fetchall()
-    x = np.array([r[0] for r in data], dtype=float)
-    y = np.array([r[1] for r in data], dtype=float)
-
-    def midranks(v):
-        order = np.argsort(v, kind="stable")
-        ranks = np.empty(len(v))
-        sv = v[order]
-        i = 0
-        while i < len(sv):
-            j = i
-            while j < len(sv) and sv[j] == sv[i]:
-                j += 1
-            ranks[order[i:j]] = (i + j + 1) / 2
-            i = j
-        return ranks
-
-    rx, ry = midranks(x), midranks(y)
-    ref = np.corrcoef(rx, ry)[0, 1]  # Pearson on midranks == Spearman
-    assert row["n_rows"] == len(x)
-    assert row["spearman_rho"] == pytest.approx(ref, abs=1e-9)
-    # centered-doubled-rank identity: Σ rank2 = n(n+1) ⇒ Σ c = 0
-    assert int(2 * rx.sum()) == len(x) * (len(x) + 1)
 
 
 def test_theil_sen_is_robust_to_outliers():

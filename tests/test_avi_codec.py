@@ -3,7 +3,7 @@
 Validation mirrors the JPEG codec's: (a) exact per-frame roundtrip on
 the tile corpus (including odd frames carrying DRI/RSTn restarts),
 (b) container structure against the public RIFF/AVI layout, (c) parser
-honesty on malformed input, (d) the gate query against its SQL oracle.
+honesty on malformed input.
 """
 
 from __future__ import annotations
@@ -20,8 +20,6 @@ from sparkroach.functions.avi import (
     parse_avi_mjpeg,
 )
 from sparkroach.functions.jpeg import decode_jpeg
-from sparkroach.queries import QUERIES
-from tests.conftest import SF_SMALL
 
 
 @pytest.mark.parametrize("doc_id", [0, 1, 2, 3, 7, 17, 123, 4096])
@@ -106,17 +104,6 @@ def test_parser_honesty():
         parse_avi_mjpeg(lying2)
 
 
-def test_gate_matches_oracle(spark):
-    from sparkroach.oracle import compare
-
-    q = QUERIES["multimodal_mjpeg_decode"]
-    r = compare(
-        "multimodal_mjpeg_decode", q.fn(spark, SF_SMALL), q.oracle, SF_SMALL
-    )
-    assert r.ok, r.detail
-    assert r.spark_rows > 0
-
-
 # ---------------------------------------------------------------------------
 # COLOR MJPEG (r7): 4:2:0 frames inside the container
 # ---------------------------------------------------------------------------
@@ -154,17 +141,3 @@ def test_color_container_roundtrip_is_exact(doc_id):
         n_ch = (p["width"] // 2) * (p["height"] // 2)
         assert d["plane_sums"][1] == c["cb"] * n_ch
         assert d["plane_sums"][2] == c["cr"] * n_ch
-
-
-def test_color_gate_matches_oracle(spark):
-    from sparkroach.oracle import compare
-
-    q = QUERIES["multimodal_mjpeg_color_decode"]
-    r = compare(
-        "multimodal_mjpeg_color_decode",
-        q.fn(spark, SF_SMALL),
-        q.oracle,
-        SF_SMALL,
-    )
-    assert r.ok, r.detail
-    assert r.spark_rows > 0

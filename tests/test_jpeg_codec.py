@@ -23,8 +23,6 @@ from sparkroach.functions.jpeg import (
     jpeg_params,
     tile_value,
 )
-from sparkroach.queries import QUERIES
-from tests.conftest import SF_SMALL
 
 
 @pytest.mark.parametrize("doc_id", [0, 1, 2, 5, 17, 123, 4096, 99999])
@@ -142,17 +140,6 @@ def test_decoder_rejects_unsupported_variants():
         decode_jpeg(b"\x00\x00")
 
 
-def test_gate_matches_oracle(spark):
-    from sparkroach import oracle
-
-    q = QUERIES["multimodal_jpeg_decode"]
-    con = oracle._duck_connection(SF_SMALL)
-    res = oracle.compare(
-        "multimodal_jpeg_decode", q.fn(spark, SF_SMALL), q.oracle, SF_SMALL, con
-    )
-    assert res.ok, res.detail
-
-
 # ---------------------------------------------------------------------------
 # YCbCr 4:2:0 (r7) — chroma subsampling encode + general-sampling decode
 # ---------------------------------------------------------------------------
@@ -263,16 +250,3 @@ def test_color_palette_margins_validated():
         color_constants(60, 60, 63)  # cb lands exactly on a .5 boundary
     with pytest.raises(ValueError, match="clips"):
         color_constants(250, 250, 250)  # y0 + 63 tile offset exceeds 255
-
-
-def test_color_gate_matches_oracle(spark):
-    from sparkroach import oracle
-
-    q = QUERIES["multimodal_jpeg_color_decode"]
-    con = oracle._duck_connection(SF_SMALL)
-    res = oracle.compare(
-        "multimodal_jpeg_color_decode", q.fn(spark, SF_SMALL), q.oracle,
-        SF_SMALL, con,
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0

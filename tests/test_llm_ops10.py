@@ -1,19 +1,11 @@
-"""Unit tests for the round-7 late-wave-3 operators (llm_ops10):
-WebDataset tar shards, URL canonicalization, the bigram-coverage LM
-filter, NFC normalization, and the image aHash near-dup plane.
-
-The oracle equivalence of each GATE is swept by test_oracle_gate (and
-the three-SF CLI sweeps); these tests pin the pure functions and the
-semantic claims a shared cross-engine mistake could hide.
-"""
+"""Pure-Python codec pins: WebDataset tar shards (functions/wds.py) and
+the image aHash (functions/ahash.py) over the real JPEG decode."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from sparkroach.functions.wds import build_tar_shard, parse_tar_shard
-from tests.conftest import SF_SMALL
 
 
 # ---------------------------------------------------------------------------
@@ -167,134 +159,3 @@ def test_ahash_matches_decoded_corpus_closed_form():
     for doc_id in range(0, 300, 7):
         real = ahash_bands(decode_jpeg(encode_doc_jpeg(doc_id))["rgb"])
         assert real == closed_form(doc_id), doc_id
-
-
-# ---------------------------------------------------------------------------
-# URL canonicalization (behavioral pins on literal URLs, both engines)
-# ---------------------------------------------------------------------------
-
-_URL_CASES = [
-    # (raw, canonical)
-    ("http://WWW.Site1.Example.COM:80/cat/5/", "http://site1.example.com/cat/5"),
-    ("https://site2.example.com:443/cat/6", "https://site2.example.com/cat/6"),
-    ("https://site3.example.com:8080/cat/7", "https://site3.example.com:8080/cat/7"),
-    (
-        "http://a.com/p?utm_source=feed&b=3&a=1#frag",
-        "http://a.com/p?a=1&b=3",
-    ),
-    ("http://a.com/p?utm_source=x&utm_medium=y", "http://a.com/p"),
-    ("http://a.com/", "http://a.com/"),
-    # a second '?' belongs to the query VALUE, not a new query — the
-    # instr-based split keeps the whole tail (split_part would drop it)
-    ("http://a.com/p?b=2?tail&a=1", "http://a.com/p?a=1&b=2?tail"),
-]
-
-
-def test_url_canonicalization_pins_spark(spark):
-    from sparkroach.queries.llm_ops10 import _canon_url_sql
-
-    rows = [(i, raw) for i, (raw, _) in enumerate(_URL_CASES)]
-    df = spark.createDataFrame(rows, "i int, url string")
-    got = {
-        r["i"]: r["c"]
-        for r in df.selectExpr(
-            "i", _canon_url_sql("url", "spark") + " AS c"
-        ).collect()
-    }
-    for i, (_, want) in enumerate(_URL_CASES):
-        assert got[i] == want, (i, got[i], want)
-
-
-def test_url_canonicalization_pins_duckdb():
-    from sparkroach.queries.llm_ops10 import _canon_url_sql
-
-    con = duckdb.connect()
-    values = ", ".join(
-        f"({i}, '{raw}')" for i, (raw, _) in enumerate(_URL_CASES)
-    )
-    rows = con.execute(
-        f"WITH t(i, url) AS (VALUES {values}) "
-        f"SELECT i, {_canon_url_sql('url', 'duckdb')} AS c FROM t ORDER BY i"
-    ).fetchall()
-    con.close()
-    for (i, got), (_, want) in zip(rows, _URL_CASES):
-        assert got == want, (i, got, want)
-
-
-# ---------------------------------------------------------------------------
-# NFC
-# ---------------------------------------------------------------------------
-
-
-def test_nfc_python_matches_duckdb_on_suffix_cases():
-    import unicodedata
-
-    from sparkroach.queries.llm_ops10 import _NFC_SUFFIXES
-
-    con = duckdb.connect()
-    for s in [f"doc text{suf}" for suf in _NFC_SUFFIXES]:
-        py = unicodedata.normalize("NFC", s)
-        db = con.execute("SELECT nfc_normalize(?)", [s]).fetchone()[0]
-        assert py == db
-    con.close()
-
-
-def test_nfc_case_semantics():
-    """Pin the semantic claim itself: cases 0/2 change, 1/3 don't, and
-    case 0 composes to the precomposed form of case 1."""
-    import unicodedata
-
-    from sparkroach.queries.llm_ops10 import _NFC_SUFFIXES
-
-    n = [unicodedata.normalize("NFC", s) for s in _NFC_SUFFIXES]
-    assert _NFC_SUFFIXES[0] != n[0] and n[0] == _NFC_SUFFIXES[1]
-    assert _NFC_SUFFIXES[1] == n[1]
-    assert _NFC_SUFFIXES[2] != n[2] and len(n[2]) < len(_NFC_SUFFIXES[2])
-    assert _NFC_SUFFIXES[3] == n[3]
-
-
-# ---------------------------------------------------------------------------
-# LM filter: the held-out split genuinely exercises OOV
-# ---------------------------------------------------------------------------
-
-
-def test_lm_split_has_unseen_bigrams(spark):
-    from sparkroach.queries.llm_ops10 import lm_bigram_coverage_score
-
-    df = lm_bigram_coverage_score(spark, SF_SMALL)
-    rows = df.collect()
-    assert all(r["doc_id"] % 2 == 1 for r in rows)  # held-out side only
-    assert any(r["n_seen"] < r["n_bigrams"] for r in rows), (
-        "no OOV bigrams — the held-out claim is vacuous"
-    )
-    assert {r["keep"] for r in rows} == {True, False}, (
-        "keep threshold does not split the population"
-    )
-
-
-# ---------------------------------------------------------------------------
-# plan shape: the pair stage is a capped equi-join, never a cross join
-# ---------------------------------------------------------------------------
-
-
-def test_ahash_pair_plan_no_cartesian(spark):
-    from sparkroach.queries.llm_ops10 import multimodal_image_ahash_pairs
-
-    plan = multimodal_image_ahash_pairs(spark, SF_SMALL)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_lm_score_plan_is_equi_join(spark):
-    """The train→score stage must be an equi-join on the bigram key
-    (broadcast or SMJ — either scales), never a nested loop."""
-    from sparkroach.queries.llm_ops10 import lm_bigram_coverage_score
-
-    plan = lm_bigram_coverage_score(spark, SF_SMALL)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert ("SortMergeJoin" in plan) or ("BroadcastHashJoin" in plan) or (
-        "ShuffledHashJoin" in plan
-    )

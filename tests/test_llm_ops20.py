@@ -267,33 +267,6 @@ def test_integer_ewma_recurrence_vector():
     assert (n, e) == (3, 52)  # 100 → 75 → 52 (floor at each step)
 
 
-def test_events_ewma_state_streamed_matches_batch_replay(spark):
-    import duckdb
-
-    from sparkroach.queries import QUERIES
-    from tests.conftest import SF_SMALL
-
-    rows = {
-        r["user_id"]: r
-        for r in QUERIES["events_ewma_state_streamed"].fn(spark, SF_SMALL).collect()
-    }
-    con = duckdb.connect()
-    data = con.execute(
-        "SELECT user_id, epoch_us(ts::TIMESTAMP), event_id, "
-        "CAST(round(value*100) AS BIGINT) FROM "
-        f"read_parquet('{SF_SMALL}/events.parquet') ORDER BY 1, 2, 3"
-    ).fetchall()
-    state: dict = {}
-    for uid, _t, _eid, cents in data:
-        n, e = state.get(uid, (0, 0))
-        e = cents if n == 0 else (cents + e) // 2
-        state[uid] = (n + 1, e)
-    assert set(rows) == set(state)
-    for uid, (n, e) in state.items():
-        assert rows[uid]["n_events"] == n, uid
-        assert rows[uid]["ewma_cents"] == e, uid
-
-
 # ---------------------------------------------------------------------------
 # delta + zigzag + LEB128 varint blocks
 # ---------------------------------------------------------------------------
@@ -544,25 +517,6 @@ def test_priority_sampling_small_population_is_exact():
     assert _dlt_estimate(weights, 0, 16) == 60
 
 
-def test_source_priority_sample_gate_invariants(spark):
-    from sparkroach.queries import QUERIES
-    from sparkroach.queries.llm_ops20 import PS_K
-    from tests.conftest import SF_SMALL
-
-    rows = QUERIES["source_priority_sample"].fn(spark, SF_SMALL).collect()
-    assert rows, "no sources"
-    for r in rows:
-        assert r["n_sample"] == min(r["n_docs"], PS_K)
-        assert r["n_w_ge_tau"] + r["n_w_lt_tau"] == r["n_sample"]
-        if r["n_docs"] <= PS_K:
-            assert r["tau_r6"] == 0.0
-            assert r["sum_w_ge_tau"] == r["true_weight"]
-        # the reassembled estimator is sane: within 4x of truth for a
-        # single realization (k=16 of ~25 docs/source at sf0.001)
-        est = r["sum_w_ge_tau"] + r["n_w_lt_tau"] * r["tau_r6"]
-        assert 0 < est < 4 * r["true_weight"]
-
-
 # ---------------------------------------------------------------------------
 # ROUGE pair scoring
 # ---------------------------------------------------------------------------
@@ -579,38 +533,6 @@ def test_clipped_overlap_does_not_overcredit_repeats():
     # "x x x y" vs "x z": three x's in a credit only the single x in b
     assert _clipped_overlap(list("xxxy"), list("xz")) == 1
     assert _clipped_overlap(list("xxy"), list("xxx")) == 2
-
-
-def test_rouge_overlap_pairs_matches_python_reference(spark):
-    import duckdb
-
-    from sparkroach.queries import QUERIES
-    from tests.conftest import SF_SMALL
-
-    rows = QUERIES["rouge_overlap_pairs"].fn(spark, SF_SMALL).collect()
-    assert rows, "no candidate pairs"
-    con = duckdb.connect()
-    texts = dict(
-        con.execute(
-            "SELECT doc_id, text FROM "
-            f"read_parquet('{SF_SMALL}/documents.parquet')"
-        ).fetchall()
-    )
-    for r in rows[:25]:
-        wa = texts[r["doc_a"]].split(" ")
-        wb = texts[r["doc_b"]].split(" ")
-        ba = [f"{x} {y}" for x, y in zip(wa, wa[1:])]
-        bb = [f"{x} {y}" for x, y in zip(wb, wb[1:])]
-        ov1 = _clipped_overlap(wa, wb)
-        ov2 = _clipped_overlap(ba, bb)
-        assert r["ov1"] == ov1 and r["na1"] == len(wa) and r["nb1"] == len(wb)
-        assert r["ov2"] == ov2
-        assert r["rouge1_f"] == pytest.approx(
-            2 * ov1 / (len(wa) + len(wb)), abs=1e-12
-        )
-        assert r["rouge2_f"] == pytest.approx(
-            2 * ov2 / (len(ba) + len(bb)), abs=1e-12
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -650,30 +572,6 @@ def _rake_ref(texts, stops, scale):
         ((p, v[0], v[1], v[2]) for p, v in agg.items()),
         key=lambda r: (-r[3], -r[2], r[0]),
     )
-
-
-def test_rake_keywords_matches_python_reference(spark):
-    import duckdb
-
-    from sparkroach.queries import QUERIES
-    from sparkroach.queries.llm_ops20 import _RAKE_SCALE, RAKE_STOPS, RAKE_TOP
-    from tests.conftest import SF_SMALL
-
-    rows = QUERIES["rake_keywords"].fn(spark, SF_SMALL).collect()
-    assert len(rows) == RAKE_TOP
-    con = duckdb.connect()
-    texts = [
-        r[0]
-        for r in con.execute(
-            f"SELECT text FROM read_parquet('{SF_SMALL}/documents.parquet')"
-        ).fetchall()
-    ]
-    ref = _rake_ref(texts, set(RAKE_STOPS), _RAKE_SCALE)[:RAKE_TOP]
-    got = [
-        (r["phrase"], r["n_words"], r["n_occurrences"], r["score_q"])
-        for r in rows
-    ]
-    assert got == ref
 
 
 def test_rake_degree_rewards_cooccurrence():
@@ -724,39 +622,6 @@ def _kn_ref(texts, vocab_size, scale):
             num = ((4 * c - 3) * n11 if c else 0) + 3 * n1v[v] * n1w[w]
             out[(v, w)] = (num, 4 * cv[v] * n11, num * scale // (4 * cv[v] * n11))
     return out
-
-
-def test_kneser_ney_gate_matches_python_reference(spark):
-    import duckdb
-
-    from sparkroach.queries import QUERIES
-    from sparkroach.queries.llm_ops20 import _KN_SCALE, KN_VOCAB
-    from tests.conftest import SF_SMALL
-
-    rows = QUERIES["lm_kneser_ney_bigram"].fn(spark, SF_SMALL).collect()
-    con = duckdb.connect()
-    texts = [
-        r[0]
-        for r in con.execute(
-            f"SELECT text FROM read_parquet('{SF_SMALL}/documents.parquet')"
-        ).fetchall()
-    ]
-    ref = _kn_ref(texts, KN_VOCAB, _KN_SCALE)
-    assert len(rows) == len(ref)
-    for r in rows:
-        num, den, q = ref[(r["v"], r["w"])]
-        assert r["prob_q9"] == q, (r["v"], r["w"])
-    # the KN identity: per-context mass sums to EXACTLY one in the
-    # rationals (Σ_w num = den for every context v)
-    from collections import defaultdict
-
-    mass = defaultdict(int)
-    dens = {}
-    for (v, _w), (num, den, _q) in ref.items():
-        mass[v] += num
-        dens[v] = den
-    for v in mass:
-        assert mass[v] == dens[v], v
 
 
 def test_kneser_ney_continuation_beats_raw_frequency():
@@ -817,24 +682,3 @@ def test_soundex_reference_matches_nara_vectors():
         assert _soundex_ref(name) == code, name
 
 
-def test_customer_soundex_blocking_matches_reference(spark):
-    from sparkroach.queries import QUERIES
-    from sparkroach.queries.llm_ops20 import _SURNAMES
-    from tests.conftest import SF_SMALL
-
-    rows = QUERIES["customer_soundex_blocking"].fn(spark, SF_SMALL).collect()
-    got = {}
-    for r in rows:
-        for nm in r["names_csv"].split(","):
-            got[nm] = r["soundex"]
-    # every surname the 150-customer sf0.001 pool reaches must land in
-    # the block its reference code names
-    assert got, "no blocks"
-    for nm, code in got.items():
-        assert code == _soundex_ref(nm), (nm, code, _soundex_ref(nm))
-    # the variant clusters actually block together (the recall property)
-    for cluster in [("smith", "smyth", "smithe"), ("robert", "rupert")]:
-        present = [n for n in cluster if n in got]
-        assert len({got[n] for n in present}) <= 1, cluster
-    # and the census is over the full surname pool at this SF
-    assert set(got) == set(_SURNAMES)

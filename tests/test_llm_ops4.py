@@ -1,15 +1,13 @@
 """Tests for llm_ops4 (SemDeDup, BPE pairs, triangles, TF-IDF), the
-histogram quantile sketch, and the left-outer streamed join.
+and the histogram quantile sketch.
 
 Value correctness is the DuckDB oracle's job (tests/test_oracle_gate.py
 sweeps every registered query); these pin the properties the oracle
 can't see — plan shapes, structural invariants, the mergeability
-contract, and the streamed gate's null-emission path.
+and the mergeability contract.
 """
 
 from __future__ import annotations
-
-import pytest
 
 import itertools
 
@@ -175,42 +173,6 @@ def test_hist_quantile_error_bound(spark):
         ).sort_values().to_numpy()
         true_p50 = int(toks[(len(toks) + 1) // 2 - 1])
         assert r.p50_bucket_lo <= true_p50 < r.p50_bucket_lo + HIST_BIN_W
-
-
-@pytest.mark.soak
-def test_left_join_streamed_emits_null_rows_and_matches_batch(spark):
-    out = QUERIES["events_left_join_streamed"].fn(spark, SF_SMALL)
-    rows = out.collect()
-    n_null = sum(1 for r in rows if r.purchase_ts is None)
-    n_matched = len(rows) - n_null
-    # the outer path (state-expiry emission) and the match path must BOTH
-    # be exercised, else the gate is vacuous
-    assert n_null > 0 and n_matched > 0
-    ev = load(spark, SF_SMALL, "events")
-    s = ev.where(F.col("event_type") == "signup").select(
-        "user_id", F.col("ts").alias("signup_ts")
-    )
-    p = ev.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    batch = s.join(
-        p,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("signup_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("signup_ts") + F.expr("INTERVAL 2 HOURS")
-        ),
-        "left",
-    ).select("user_id", "signup_ts", "purchase_ts", "purchase_value")
-    key = lambda r: (  # noqa: E731
-        r.user_id,
-        r.signup_ts,
-        r.purchase_ts or pd.Timestamp.min,
-    )
-    assert sorted(rows, key=key) == sorted(batch.collect(), key=key)
 
 
 def test_knn_graph_rank_contract(spark):

@@ -12,10 +12,6 @@ test_oracle_gate.py value-checks them against DuckDB as well).
 
 from __future__ import annotations
 
-import pytest
-
-import pyspark.sql.functions as F
-
 from sparkroach.queries import QUERIES
 from sparkroach.tables import load
 from tests.conftest import SF_SMALL
@@ -23,14 +19,6 @@ from tests.conftest import SF_SMALL
 
 def _run(name):
     return QUERIES[name].fn
-
-
-def test_orc_roundtrip_formats_agree(spark):
-    rows = {r.format: r for r in _run("documents_orc_roundtrip")(spark, SF_SMALL).collect()}
-    assert set(rows) == {"orc", "parquet"}
-    o, p = rows["orc"], rows["parquet"]
-    assert o.asDict() == {**p.asDict(), "format": "orc"}
-    assert o.n_rows == load(spark, SF_SMALL, "documents").count() > 0
 
 
 def test_xml_roundtrip_covers_whole_corpus(spark):
@@ -42,179 +30,9 @@ def test_xml_roundtrip_covers_whole_corpus(spark):
     assert row.text_hash_sum > 0
 
 
-def test_dynamic_partition_overwrite_touches_only_target_day(spark):
-    ev = load(spark, SF_SMALL, "events").select(
-        F.to_date("ts").alias("day"), "event_id"
-    )
-    per_day = {
-        r.day: (r.n, r.n_even)
-        for r in ev.groupBy("day")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("event_id") % 2 == 0).cast("long")).alias("n_even"),
-        )
-        .collect()
-    }
-    busiest = max(per_day, key=lambda d: (per_day[d][0], str(d)))
-    got = {
-        r.day: r.n_events
-        for r in _run("events_dynamic_partition_overwrite")(spark, SF_SMALL).collect()
-    }
-    assert set(got) == {str(d) for d in per_day}
-    for day, (n, n_even) in per_day.items():
-        want = n_even if day == busiest else n
-        assert got[str(day)] == want, (day, busiest)
-
-
-def test_schema_evolution_null_fills_old_generation(spark):
-    d = load(spark, SF_SMALL, "documents")
-    want = {
-        r.lang: (r.n, r.n_old)
-        for r in d.groupBy("lang")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("doc_id") % 2 == 0).cast("long")).alias("n_old"),
-        )
-        .collect()
-    }
-    rows = _run("documents_schema_evolution")(spark, SF_SMALL).collect()
-    assert {r.lang: (r.n_docs, r.n_old_generation) for r in rows} == want
-
-
-def test_shard_export_manifest_is_a_partition_of_the_corpus(spark):
-    d = load(spark, SF_SMALL, "documents")
-    rows = _run("documents_shard_export")(spark, SF_SMALL).collect()
-    assert sum(r.n_docs for r in rows) == d.count()
-    assert sum(r.doc_id_sum for r in rows) == d.agg(F.sum("doc_id")).collect()[0][0]
-    assert len({r.shard for r in rows}) == len(rows)
-
-
 def test_lsh_recall_report_bounds(spark):
     (row,) = _run("lsh_recall_report")(spark, SF_SMALL).collect()
     assert row.n_found <= row.n_true_pairs
     assert 0.0 <= row.recall <= 1.0
     if row.n_true_pairs:
         assert row.recall == row.n_found / row.n_true_pairs
-
-
-def test_dedup_streamed_collapses_redelivery_exactly(spark):
-    ev = load(spark, SF_SMALL, "events")
-    out = _run("events_dedup_streamed")(spark, SF_SMALL)
-    assert out.count() == ev.count()
-    assert (
-        out.select("event_id").distinct().count()
-        == ev.select("event_id").distinct().count()
-    )
-
-
-@pytest.mark.soak
-def test_full_join_streamed_null_extends_both_sides(spark):
-    from sparkroach.streaming.events import JOIN_WINDOW_HOURS
-
-    rows = _run("events_full_join_streamed")(spark, SF_SMALL).collect()
-    # null-extension must fire on BOTH sides — that's the mechanism this
-    # gate exists to prove (right-side expiry the left-join gate never runs)
-    assert any(r.signup_ts is None for r in rows)
-    assert any(r.purchase_ts is None for r in rows)
-    ev = load(spark, SF_SMALL, "events")
-    s = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id").alias("su"), F.col("ts").alias("sts")
-    )
-    p = ev.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"), F.col("ts").alias("pts"), "value"
-    )
-    batch = s.join(
-        p,
-        (F.col("su") == F.col("pu"))
-        & (F.col("pts") >= F.col("sts"))
-        & (
-            F.col("pts")
-            <= F.col("sts") + F.expr(f"INTERVAL {JOIN_WINDOW_HOURS} HOURS")
-        ),
-        "full_outer",
-    )
-    assert len(rows) == batch.count()
-    matched = sum(
-        1 for r in rows if r.signup_ts is not None and r.purchase_ts is not None
-    )
-    assert matched == batch.where(
-        F.col("sts").isNotNull() & F.col("pts").isNotNull()
-    ).count()
-
-
-@pytest.mark.soak
-def test_sessions_timeout_streamed_matches_batch_twin(spark):
-    """Timer-expiry sessionizer must equal the batch gap-split twin."""
-    from pyspark.sql import Window
-
-    got = {
-        (r.user_id, r.n_sessions)
-        for r in _run("events_sessions_timeout_streamed")(spark, SF_SMALL).collect()
-    }
-    ev = load(spark, SF_SMALL, "events")
-    w = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"), "event_id")
-    new_sess = (
-        F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-        > 1800 * 1_000_000
-    ) | F.lag(F.unix_micros("ts")).over(w).isNull()
-    want = {
-        (r.user_id, r.n_sessions)
-        for r in ev.select("user_id", new_sess.cast("long").alias("ns"))
-        .groupBy("user_id")
-        .agg(F.sum("ns").alias("n_sessions"))
-        .where(F.col("user_id") < 25)
-        .collect()
-    }
-    assert got == want
-    # nonvacuous: at least one multi-session user, else the gap split
-    # (and the timeout mechanism) was never exercised
-    assert any(n > 1 for _, n in got)
-
-
-def test_dedup_then_rollup_equals_batch_rollup_of_original(spark):
-    got = {
-        (r.hour_bucket, r.event_type): (r.n, r.total_value)
-        for r in _run("events_dedup_then_rollup_streamed")(spark, SF_SMALL).collect()
-    }
-    ev = load(spark, SF_SMALL, "events")
-    want = {
-        (r.hour_bucket, r.event_type): (r.n, r.total_value)
-        for r in ev.groupBy(
-            F.date_trunc("hour", "ts").alias("hour_bucket"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(28,10)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
-def test_stream_static_join_equals_batch_enrichment(spark):
-    ev = load(spark, SF_SMALL, "events")
-    dim = (
-        ev.where(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_purchases"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("double")
-            .alias("purchase_cents"),
-        )
-    )
-    want = {
-        (r.user_id, r.n_events, r.n_purchases, r.purchase_cents)
-        for r in ev.join(dim, "user_id")
-        .groupBy("user_id", "n_purchases", "purchase_cents")
-        .agg(F.count("*").alias("n_events"))
-        .collect()
-    }
-    got = {
-        (r.user_id, r.n_events, r.n_purchases, r.purchase_cents)
-        for r in _run("events_stream_static_join")(spark, SF_SMALL).collect()
-    }
-    assert got == want

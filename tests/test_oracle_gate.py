@@ -47,7 +47,7 @@ def test_driver_window_budget():
     qs = list(e.queries())
     assert len(qs) <= DRIVER_WINDOW, (
         f"{len(qs)} gated queries exceed the driver's {DRIVER_WINDOW}-entry "
-        "window — mark near-duplicates gated=False"
+        "window — drop names from rotation.ACTIVE_WINDOW"
     )
     oracles = e.oracle_sql()
     seen_rows_only = False

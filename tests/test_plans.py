@@ -103,33 +103,14 @@ def test_r3_rotated_queries_have_no_quadratic_joins(spark):
     """Every query rotated into the r3 driver window plus the r3 additions:
     no CartesianProduct / BroadcastNestedLoopJoin anywhere."""
     for name in (
-        "q7_volume_shipping", "q14_promo_revenue", "q16_supplier_part_count",
-        "q19_disjunctive_revenue", "token_quantiles_by_source",
+        "token_quantiles_by_source",
         "text_stopword_quality", "ngram_char_jaccard",
         "doc_rolling_fingerprint", "doc_repetition_stats",
-        "gopher_quality_gate", "q13_order_distribution", "q15_top_supplier",
-        "q17_small_qty_revenue",
+        "gopher_quality_gate",
     ):
         plan = _plan(spark, name)
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
-
-
-def test_q15_max_is_broadcast_not_sort(spark):
-    """The argmax compare must be a 1-row broadcast against the aggregate,
-    not a global sort."""
-    plan = _plan(spark, "q15_top_supplier")
-    assert "BroadcastHashJoin" in plan
-    assert "TakeOrderedAndProject" not in plan.split("BroadcastHashJoin")[0]
-    assert "SortMergeJoin" not in plan
-
-
-def test_q17_broadcasts_brand_dim_and_pushes_filter(spark):
-    plan = _plan(spark, "q17_small_qty_revenue")
-    assert "BroadcastHashJoin" in plan
-    # the brand equality must reach the part scan as a pushed filter
-    assert "EqualTo(p_brand,Brand#23)" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_gopher_gate_is_map_only_before_sort(spark):
@@ -200,16 +181,6 @@ def test_capped_band_pairs_flood_path_keeps_streaming_frames(spark):
     assert "BroadcastExchange" in plan
 
 
-def test_range_join_is_bucketed_hash_join_not_nested_loop(spark):
-    """The point-in-interval range join has no equality key; the bucketed
-    composition must plan as a hash join on the bucket, never a
-    BroadcastNestedLoopJoin / CartesianProduct."""
-    plan = _plan(spark, "events_session_range_join")
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "bucket" in plan
-
-
 def test_simhash_hamming_pairs_is_banded_not_quadratic(spark):
     """The SimHash pair generator must go through the capped band join
     (hash join on band keys + broadcast over-cap list), never an n²
@@ -238,37 +209,6 @@ def test_funnel_is_one_grouped_pass_with_broadcast_drop_set(spark):
     assert "HashAggregate" in plan
 
 
-def test_cube_is_one_expand_over_one_scan(spark):
-    """CUBE(source, lang) must plan as a single Expand feeding one hash
-    aggregate over ONE corpus scan — not four separate scans unioned."""
-    import re
-
-    plan = _plan(spark, "docs_grouping_sets")
-    assert "Expand" in plan
-    scans = [
-        line for line in plan.splitlines()
-        if re.match(r"\(\d+\) Scan parquet", line.strip())
-    ]
-    assert len(scans) == 1
-    assert "HashAggregate" in plan
-
-
-def test_unpivot_keeps_zero_rows_and_stays_expand_shaped(spark):
-    """The melt must surface explicit zero rows (they exist only in the
-    wide form) and plan as a map-side Expand — no extra shuffle, no
-    data-dependent distinct scan."""
-    from tests.conftest import SF_SMALL as _SF
-
-    df = QUERIES["events_value_unpivot"].fn(spark, _SF)
-    rows = df.collect()
-    assert any(r.n == 0 for r in rows), "no zero rows — melt is vacuous"
-    n_users = len({r.user_id for r in rows})
-    assert len(rows) == n_users * 5
-    plan = _plan(spark, "events_value_unpivot")
-    assert "Expand" in plan
-    assert "CartesianProduct" not in plan
-
-
 # Queries whose fn materializes its result before returning (streaming
 # gates, scratch-dir round-trips, multi-consumed graph stages): the
 # returned plan is a scan of the materialized output, so there is nothing
@@ -276,87 +216,18 @@ def test_unpivot_keeps_zero_rows_and_stays_expand_shaped(spark):
 # internals ("file.py::test_fn"); test_materialized_pins_are_live asserts
 # each pointer resolves, so the escape hatch can't widen silently.
 _MATERIALIZED = {
-    "bucketed_orders_join":
-        "test_analytics11.py::test_bucketed_join_has_no_exchange",
-    # continuation wave: driver-assembled / self-materializing gates —
-    # the returned plan is a trivial createDataFrame, so the audit
-    # would only re-execute the full gate to learn nothing
-    "events_ewma_state_streamed":
-        "test_llm_ops20.py::test_events_ewma_state_streamed_matches_batch_replay",
-    "dup_graph_kcore":
-        "test_analytics29.py::test_dup_graph_kcore_gate_invariants",
-    "events_minute_acf":
-        "test_analytics29.py::test_events_minute_acf_gate_matches_numpy",
-    "events_hourly_theil_sen":
-        "test_analytics29.py::test_events_hourly_theil_sen_matches_reference",
-    "events_mann_whitney_u":
-        "test_analytics29.py::test_events_mann_whitney_u_matches_numpy",
-    "lineitem_ols_cramer":
-        "test_analytics29.py::test_lineitem_ols_matches_numpy_least_squares",
-    "user_activity_gini":
-        "test_analytics29.py::test_user_activity_gini_gate_matches_numpy",
-    "events_markov_stationary":
-        "test_analytics29.py::test_markov_stationary_matches_eigenvector",
     "dedup_cc_clusters":
         "test_llm_scale.py::test_cc_clusters_plan_is_bucketed",
-    "dedup_streaming_kept":
-        "test_streaming_dedup.py::test_stream_matches_batch_twin",
     "documents_format_roundtrip":
         "test_analytics10.py::test_format_roundtrip_checksums_agree_across_formats",
-    "documents_orc_roundtrip":
-        "test_materialized_pins.py::test_orc_roundtrip_formats_agree",
     "documents_xml_roundtrip":
         "test_materialized_pins.py::test_xml_roundtrip_covers_whole_corpus",
-    "events_dynamic_partition_overwrite":
-        "test_materialized_pins.py::test_dynamic_partition_overwrite_touches_only_target_day",
-    "events_dedup_jitter_streamed":
-        "test_streaming_events.py::test_dedup_jitter_collapses_what_plain_dedup_cannot",
-    "events_dedup_streamed":
-        "test_materialized_pins.py::test_dedup_streamed_collapses_redelivery_exactly",
-    "events_join_streamed":
-        "test_streaming_events.py::test_stream_stream_join_restart_cut_straddles_a_pair",
-    "events_left_join_streamed":
-        "test_llm_ops4.py::test_left_join_streamed_emits_null_rows_and_matches_batch",
-    "documents_schema_evolution":
-        "test_materialized_pins.py::test_schema_evolution_null_fills_old_generation",
-    "events_partitioned_read":
-        "test_analytics11.py::test_partitioned_read_prunes",
-    "events_rollup_streamed":
-        "test_streaming_events.py::test_windowed_rollup_with_watermark",
-    "events_rollup_update_streamed":
-        "test_streaming_events.py::test_update_mode_straddling_hour_is_nonvacuous",
-    "events_sessions_streamed":
-        "test_streaming_events.py::test_sessions_streamed_equals_batch_twin",
-    "events_topk_per_user_streamed":
-        "test_streaming_events.py::test_topk_streamed_equals_batch_rank_window",
-    "events_stream_static_join":
-        "test_materialized_pins.py::test_stream_static_join_equals_batch_enrichment",
-    "events_dedup_then_rollup_streamed":
-        "test_materialized_pins.py::test_dedup_then_rollup_equals_batch_rollup_of_original",
-    "events_full_join_streamed":
-        "test_materialized_pins.py::test_full_join_streamed_null_extends_both_sides",
-    "events_sessions_timeout_streamed":
-        "test_materialized_pins.py::test_sessions_timeout_streamed_matches_batch_twin",
-    "hll_streaming_merge":
-        "test_sketches.py::test_streaming_hll_equals_batch_sketch",
     "knn_graph_ivf":
         "test_llm_ops4.py::test_knn_graph_rank_contract",
-    "lineitem_zorder_read":
-        "test_zorder.py::test_zorder_prunes_more_files_than_linear_sort",
     "lsh_recall_report":
         "test_materialized_pins.py::test_lsh_recall_report_bounds",
-    "documents_shard_export":
-        "test_materialized_pins.py::test_shard_export_manifest_is_a_partition_of_the_corpus",
-    "multimodal_binaryfile_ingest":
-        "test_analytics22.py::test_binaryfile_ingest_equals_mapinpandas_lane",
-    "documents_text_source_roundtrip":
-        "test_analytics22.py::test_text_roundtrip_preconditions_and_checksums",
-    "documents_sql_ddl_roundtrip":
-        "test_analytics23.py::test_ddl_roundtrip_content_and_rerun_idempotence",
     "events_zone_map_report":
         "test_analytics28.py::test_zone_map_report_sorted_layout_properties",
-    "documents_zip_shard_ingest":
-        "test_llm_ops19.py::test_zip_gate_pin",
 }
 
 
@@ -390,22 +261,10 @@ _SCALAR_BNLJ_OK = {
     # (queries x nlist-bounded centroid table, the ann_ivf_multiprobe shape)
     "ann_ivfpq_rerank",
     "bpe_second_merge",  # crossJoin against the 1-row learned merge
-    "chain_end_to_end", "domain_mix_weights", "events_funnel_conversion",
-    "events_gap_fill", "hist_quantile_sketch", "hll_distinct_sketch",
-    "kmv_type_jaccard", "pagerank_dup_graph", "q11_important_stock",
-    "q22_global_sales_opportunity", "suppkey_skew_report",
+    "chain_end_to_end", "hist_quantile_sketch", "hll_distinct_sketch",
+    "pagerank_dup_graph", "suppkey_skew_report",
     "temperature_mix_weights", "temperature_sample_by_lang",
-    "term_cooccurrence_lift", "tfidf_top_terms",
-    # 1-row peak/count aggregates joined back (scalar build sides)
-    "sessions_concurrency_peak",
-    # 1-row bounds/totals/max scalars joined back at three stages
-    "events_value_ks_drift",
-    # 1-row bounds/grand scalars + a 2-row constant grp frame
-    "events_type_drift_chi2",
-    "cms_join_size_estimate",  # 1-row est x 1-row exact crossJoin
-    # 8-row x 8-row broadcast pair join over the top-8 user bitmaps:
-    # build side bounded by the TOP_USERS constant, never by data size
-    "user_activity_bitmap_pairs",
+    "tfidf_top_terms",
     # r7 wave 8+: 1-row scalar cross joins
     "bpe_encode_apply",  # 1-row stats x 1-row top-pieces string
     "epoch_shuffle_order",  # 1-row census x 1-row head8 string
@@ -420,11 +279,6 @@ _SCALAR_BNLJ_OK = {
     "events_ordered_funnel_maxgap",  # three 1-row step counts fused
     "dup_graph_triangles",  # stats x edges x triangles scalars
     "search_ndcg_report",  # 1-row DCG x 1-row IDCG
-    # continuation wave: 1-row x 1-row bookkeeping crossJoins
-    "events_ams_f2_sketch",  # 1-row exact F2 x 1-row median estimate
-    "events_hilbert_locality_report",  # 1-row stats x 1-row path sums x2
-    "lm_kneser_ney_bigram",  # vocab x vocab grid (literal KN_VOCAB bound)
-    "events_sax_quantile_words",  # segments x 1-row quartile cuts
 }
 
 
@@ -441,12 +295,6 @@ _SCALAR_BNLJ_OK = {
 _GLOBAL_WINDOW_OK = {
     "bpe_pair_counts",  # charset²-bounded pair table
     "bpe_second_merge",  # charset²-bounded pair table, two iterations
-    "events_hilbert_locality_report",  # ordering windows over the
-    # literal-bounded 256×256 occupied-cell table (≤ 65536 rows ever)
-    "events_sax_quantile_words",  # rank over the time-bounded PAA
-    # segment table (≤ ~120 rows at the 30-day corpus)
-    "events_hourly_theil_sen",  # pair/point sets are time-bounded (≤2000
-    # hourly points guarded in the query; ~260k pairs whatever the corpus)
     "events_user_value_ntiles",  # total order is the semantics; documented
     "hist_quantile_sketch",  # histogram-bucket-bounded aggregate
     "source_budget_apportion",  # source-cardinality-bounded (≤ dozens)
@@ -500,7 +348,7 @@ def test_every_registered_query_plan_is_scale_safe(spark):
             assert not w, (
                 f"{name}: unlisted empty-partition-spec Window {w} — "
                 "either rewrite it (TakeOrdered top-k / distributed "
-                "global_row_number / running_global_sum) or document the "
+                "global_row_number) or document the "
                 "bounded input in _GLOBAL_WINDOW_OK"
             )
         audited += 1
@@ -745,35 +593,6 @@ def test_cbo_stats_reorder_joins(spark):
 # ---------------------------------------------------------------------------
 # round-7 additions
 # ---------------------------------------------------------------------------
-
-
-def test_pii_scrub_is_map_only_before_sort(spark):
-    """The PII scrub must be one scan + projected regex work — no join,
-    no aggregation exchange; the only exchange is the output ordering.
-    At 100 TB this is the per-row pre-tokenization pass and any shuffle
-    here would be pure waste."""
-    import re
-
-    plan = _plan(spark, "pii_scrub_report")
-    assert "Join" not in plan
-    scans = [
-        line for line in plan.splitlines()
-        if re.match(r"\(\d+\) Scan parquet", line.strip())
-    ]
-    assert len(scans) == 1
-
-
-def test_incremental_dedup_joins_are_hash_equi_joins(spark):
-    """Batch-vs-index candidate generation must pair through band-key
-    EQUI-joins (hash-partitioned), never a nested-loop or cartesian —
-    the whole point of the stored index is that the old corpus is only
-    ever touched through its band keys."""
-    plan = _plan(spark, "dedup_incremental_new_docs")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
-        "BroadcastHashJoin" in plan
-    )
 
 
 def test_winnowing_fps_window_is_per_doc_partitioned(spark):

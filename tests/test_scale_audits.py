@@ -46,32 +46,6 @@ _BROADCAST_OK: dict[tuple[str, str], str] = {
     ("queries/analytics.py", "r"): "TPC-H region dimension (5 rows)",
     ("queries/analytics.py", "s"): "TPC-H supplier dimension",
     ("queries/analytics10.py", "g"): "1-row global skew aggregate",
-    ("queries/analytics11.py", "pairs"):
-        "event-type × event-type pair frame (key-dimension²)",
-    ("queries/analytics12.py", "n_docs"): "1-row corpus count",
-    ("queries/analytics12.py", "th"):
-        "per-event-type winsor thresholds (key-dimension)",
-    ("queries/analytics12.py", "vocab"):
-        "limit(COOC_VOCAB) literal-bounded vocabulary head",
-    ("queries/analytics13.py", "bounds"): "1-row global min/max",
-    ("queries/analytics13.py", "tot"):
-        "per-prev-type totals (key-dimension)",
-    ("queries/analytics16.py", "bounds"): "1-row global bounds",
-    ("queries/analytics16.py", "ct"): "per-event-type totals (key-dimension)",
-    ("queries/analytics16.py", "g"): "1-row grand total",
-    ("queries/analytics16.py", "grps"): "2-row constant group frame",
-    ("queries/analytics16.py", "mx"): "1-row global max (KS statistic)",
-    ("queries/analytics16.py", "off"):
-        "per-partition prefix offsets (bounded by shuffle partitions)",
-    ("queries/analytics16.py", "peak"): "1-row global peak",
-    ("queries/analytics16.py", "rt"): "per-group totals (2 groups)",
-    ("queries/analytics16.py", "tot"): "1-row total",
-    ("queries/analytics19.py", "b"):
-        "TOP_USERS-bounded bitmap side (literal-bounded)",
-    ("queries/analytics19.py",
-     'ch.where(F.col("changed") == 1).select("bucket")'):
-        "changed-bucket list, bounded by the constant bucket count",
-    ("queries/analytics19.py", "top8"): "literal top-8 user set",
     ("queries/analytics25.py", "frontier"):
         "BFS frontier over the dup graph — dup-cluster-bounded per layer "
         "(documented assumption of the layered-BFS recipe)",
@@ -83,42 +57,6 @@ _BROADCAST_OK: dict[tuple[str, str], str] = {
     ("queries/analytics27.py", "n"): "1-row count",
     ("queries/analytics27.py", "offs"):
         "per-partition prefix offsets (bounded by shuffle partitions)",
-    ("queries/analytics29.py", "cuts"): "1-row quartile-cut scalars",
-    ("queries/analytics29.py", "a"):
-        "time-bounded hourly aggregate (720 rows at the 30-day corpus, "
-        "guarded <= TS_MAX_POINTS in the query) — the Theil-Sen pair "
-        "side is constant in corpus size",
-    ("queries/analytics3.py", "big"):
-        "q18 having-clause survivors (aggregate-filtered, classically tiny)",
-    ("queries/analytics3.py", "n"): "TPC-H nation dimension",
-    ("queries/analytics3.py", "p"): "TPC-H part dimension",
-    ("queries/analytics3.py", "s"): "TPC-H supplier dimension",
-    ("queries/analytics4.py", "bad"):
-        "complaint-filtered supplier subset (dimension slice)",
-    ("queries/analytics4.py", "c"): "TPC-H customer dimension",
-    ("queries/analytics4.py", "n"): "TPC-H nation dimension",
-    ("queries/analytics4.py", "p"): "TPC-H part dimension",
-    ("queries/analytics4.py", "s"): "TPC-H supplier dimension",
-    ("queries/analytics5.py", "mx"): "1-row global max",
-    ("queries/analytics5.py", "p"): "TPC-H part dimension",
-    ("queries/analytics5.py", "s"): "TPC-H supplier dimension",
-    ("queries/analytics5.py", "stats"):
-        "per-event-type clamp stats (key-dimension)",
-    ("queries/analytics6.py", "bench"):
-        "benchmark/eval n-gram set (contamination probe; eval sets are "
-        "fixed-size by construction)",
-    ("queries/analytics6.py", "pos"): "1-row aggregate",
-    ("queries/analytics6.py", "t"): "1-row aggregate",
-    ("queries/analytics7.py", "c"): "TPC-H customer dimension",
-    ("queries/analytics7.py", "cust_nations"):
-        "2-nation filtered dimension slice",
-    ("queries/analytics7.py", "n"): "TPC-H nation dimension",
-    ("queries/analytics7.py", 'n.select("n_nationkey", "n_name")'):
-        "TPC-H nation dimension projection",
-    ("queries/analytics7.py", "p"): "TPC-H part dimension",
-    ("queries/analytics7.py", "r"): "TPC-H region dimension",
-    ("queries/analytics7.py", "s"): "TPC-H supplier dimension",
-    ("queries/analytics7.py", "total"): "1-row total",
     ("queries/llm_ops.py", "centroids"):
         "k-means centroid table (NLIST literal-bounded)",
     ("queries/llm_ops.py", "lex"): "stopword lexicon (fixed wordlists)",
@@ -140,19 +78,13 @@ _BROADCAST_OK: dict[tuple[str, str], str] = {
     ("queries/llm_ops14.py", "head"): "1-row head-sample string",
     ("queries/llm_ops14.py", "qv"): "1-row query vector",
     ("queries/llm_ops16.py", "top"): "1-row top-pieces aggregate",
-    ("queries/llm_ops19.py", 'cand.join(qs, "q_id")'):
-        "NSW probe side: queries × (beam ∪ neighbors) — literal-bounded "
-        "by N_QUERIES · NSW_BEAM · (degree+1) per round",
-    ("queries/llm_ops20.py", 'big.select("v").distinct()'):
-        "KN grid context side — bounded by the literal KN_VOCAB+1 "
-        "model vocabulary, never the corpus",
-    ("queries/llm_ops20.py", 'vocab.withColumnRenamed("t", "vt")'):
-        "top-KN_VOCAB token list (literal-bounded by construction)",
+    ("queries/llm_ops2.py", "off"):
+        "per-partition prefix offsets (bounded by shuffle partitions)",
     ("queries/llm_ops2.py", "q"): "literal-bounded ANN query set",
-    ("queries/llm_ops2.py", 'q.join(probes, "q_id")'):
-        "queries × nprobe probe shortlist",
     ("queries/llm_ops2.py", "qe"):
         "query embeddings for the literal-bounded rerank query set",
+    ("queries/llm_ops2.py", 'q.join(probes, "q_id")'):
+        "queries × nprobe probe shortlist",
     ("queries/llm_ops3.py", "df_t"):
         "document-frequency census over the ≤ BM25_PROBES·BM25_QTERMS "
         "collected query terms — one row per query term, literal-bounded",
@@ -176,17 +108,11 @@ _BROADCAST_OK: dict[tuple[str, str], str] = {
         "CMS counter table (width literal-bounded)",
     ("queries/sketches.py", "exact"):
         "per-event-type exact aggregates (key-dimension)",
-    ("streaming/events.py", "busiest"): "1-row argmax",
-    ("streaming/events.py", "dim"):
-        "per-user purchase profile — the static enrichment dimension, "
-        "bounded by the user universe, not event volume (docstring "
-        "documents the trade; streaming has no AQE to fall back on)",
-    ("streaming/events.py", "exact"): "1-row exact aggregate",
     ("stress.py", "frontier"):
         "BFS frontier (dup-cluster-bounded per layer, stress-measured)",
+    ("stress.py", "qv"): "literal-bounded stress query set",
     ("stress.py", 'qlut.join(probes, "q_id")'):
         "queries × nprobe LUT shortlist",
-    ("stress.py", "qv"): "literal-bounded stress query set",
 }
 
 
