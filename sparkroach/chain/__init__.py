@@ -6,7 +6,7 @@ Modules:
                 (setup_cockroachdb.sql:7-122 re-expressed as StructTypes)
   encoding    — canonical JSON codec, addresses, txids, pagination tokens
   transforms  — pure DataFrame fns: one block micro-batch → per-table rows
-  store       — bucketed copy-on-write parquet tables with MERGE semantics
+  store       — bucketed merge-on-read parquet tables with MERGE semantics
   ingest      — round-gated exactly-once ingest (batch + Structured Streaming)
   query       — the Indexer read surface (idb.go:171-387) as filter
                 dataclasses compiled to DataFrames

@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 
 from sparkroach.chain import transforms
 from sparkroach.chain.encoding import canonical_json
-from sparkroach.chain.schemas import TABLE_SCHEMAS, block_schema
-from sparkroach.chain.store import ChainStore
+from sparkroach.chain.schemas import TABLE_KEYS, TABLE_SCHEMAS, block_schema
+from sparkroach.chain.store import FACT_TABLES, ChainStore
 
 
 # LoadGenesis writes this sentinel so the schema is compatible with the
@@ -255,8 +255,17 @@ class ChainDB:
             blocks.where(F.col("round") != 0) if 0 in todo else blocks
         )
 
+        # A replayed batch skips every table that already committed it: a
+        # fact table whose round watermark covers the batch (append_facts
+        # would write nothing) costs no Spark job, and each state merge is
+        # tagged with the batch's last round, which merge_state skips.
+        last_round = todo[-1]
+        pending = {
+            t for t in FACT_TABLES
+            if (w := self.store.fact_watermark(t)) is None or w < last_round
+        }
         flat = None
-        if has["n_txns"]:
+        if has["n_txns"] and pending & {"txn", "txn_participation"}:
             # the txn-tree flatten feeds three tables — materialize it once
             # BEFORE fanning out so concurrent consumers hit the cache.
             # Data-adaptive depth: most blocks carry no inner txns, and the
@@ -280,11 +289,12 @@ class ChainDB:
         # which does not need it — could already be running); the three
         # flat consumers below wait on its future before they start, so
         # they still hit the cache instead of racing to compute it.
-        tasks: list = [
-            lambda: self.store.append_facts(
+        tasks: list = []
+        if "block_header" in pending:
+            tasks.append(lambda: self.store.append_facts(
                 "block_header", transforms.block_headers(blocks)
-            )
-        ]
+            ))
+
         def _append_txn():
             flat_ready.result()
             self.store.append_facts("txn", transforms.txns(nz_blocks, rows=flat))
@@ -296,9 +306,12 @@ class ChainDB:
                 transforms.participation(nz_blocks, rows=flat),
             )
 
-        if has["n_txns"]:
-            tasks.append(_append_txn)
-            tasks.append(_append_participation)
+        if flat is not None:
+            tasks += [
+                t for n, t in (("txn", _append_txn),
+                               ("txn_participation", _append_participation))
+                if n in pending
+            ]
         # dense-update heuristic: the gate collect already counted updates
         # per plane; when a batch averages >=4 keys per bucket every bucket
         # collides anyway, so the merge skips its touched-bucket discovery
@@ -312,19 +325,20 @@ class ChainDB:
                 acct,
                 touch_keys=upd.select("addr"),
                 touch_all=n_upd["n_accts"] >= dense,
+                last_round=last_round,
             )
 
         if has["n_accts"]:
             tasks.append(_merge_account_task)
         if has["n_assets"]:
             tasks.append(lambda: self._merge_assets(
-                nz_blocks, touch_all=n_upd["n_assets"] >= dense))
+                nz_blocks, n_upd["n_assets"] >= dense, last_round))
         if has["n_apps"]:
             tasks.append(lambda: self._merge_apps(
-                nz_blocks, touch_all=n_upd["n_apps"] >= dense))
+                nz_blocks, n_upd["n_apps"] >= dense, last_round))
         if has["n_boxes"]:
             tasks.append(lambda: self._merge_boxes(
-                nz_blocks, touch_all=n_upd["n_boxes"] >= dense))
+                nz_blocks, n_upd["n_boxes"] >= dense, last_round))
 
         # try/finally so a failing table task cannot leak the cached
         # micro-batch / flatten across batches of a long-lived streaming
@@ -354,7 +368,7 @@ class ChainDB:
             self.store.merge_metastate(
                 {
                     "accounts": accounts_v,
-                    "state": json.dumps({"next_account_round": todo[-1] + 1}),
+                    "state": json.dumps({"next_account_round": last_round + 1}),
                 }
             )
         finally:
@@ -425,7 +439,9 @@ class ChainDB:
         )
         return acct, upd
 
-    def _merge_assets(self, blocks: DataFrame, touch_all: bool = False) -> None:
+    def _merge_assets(
+        self, blocks: DataFrame, touch_all: bool = False, last_round: int | None = None
+    ) -> None:
         aupd = transforms.asset_updates(blocks)
         asset = _fold(aupd, ["id"], ["creator_addr", "params"])
         self.store.merge_state(
@@ -439,6 +455,7 @@ class ChainDB:
             },
             touch_keys=aupd.select("id"),
             touch_all=touch_all,
+            last_round=last_round,
         )
         aaupd = transforms.account_asset_updates(blocks)
         # deleteAccountAsset's ON CONFLICT updates only amount/deleted/
@@ -477,9 +494,12 @@ class ChainDB:
             },
             touch_keys=aaupd.select("addr", "assetid"),
             touch_all=touch_all,
+            last_round=last_round,
         )
 
-    def _merge_apps(self, blocks: DataFrame, touch_all: bool = False) -> None:
+    def _merge_apps(
+        self, blocks: DataFrame, touch_all: bool = False, last_round: int | None = None
+    ) -> None:
         aupd = transforms.app_updates(blocks)
         app = _fold(aupd, ["id"], ["creator", "params"])
         self.store.merge_state(
@@ -493,6 +513,7 @@ class ChainDB:
             },
             touch_keys=aupd.select("id"),
             touch_all=touch_all,
+            last_round=last_round,
         )
         apupd = transforms.account_app_updates(blocks)
         ap = _fold(apupd, ["addr", "app"], ["localstate"])
@@ -507,9 +528,12 @@ class ChainDB:
             },
             touch_keys=apupd.select("addr", "app"),
             touch_all=touch_all,
+            last_round=last_round,
         )
 
-    def _merge_boxes(self, blocks: DataFrame, touch_all: bool = False) -> None:
+    def _merge_boxes(
+        self, blocks: DataFrame, touch_all: bool = False, last_round: int | None = None
+    ) -> None:
         bupd = transforms.box_updates(blocks)
         box = _fold(bupd, ["app", "name"], ["value"])
         self.store.merge_state(
@@ -523,9 +547,16 @@ class ChainDB:
             },
             touch_keys=bupd.select("app", "name"),
             touch_all=touch_all,
+            last_round=last_round,
         )
 
-    def _merge_account(self, folded: DataFrame, touch_keys=None, touch_all: bool = False) -> None:
+    def _merge_account(
+        self,
+        folded: DataFrame,
+        touch_keys=None,
+        touch_all: bool = False,
+        last_round: int | None = None,
+    ) -> None:
         """account MERGE incl. the keytype clauses (writer.go:62-113,
         :155-179): when a sig-type delta arrived the column takes the delta
         VALUE — which is NULL for a sender whose last root txn was rekeyed
@@ -549,16 +580,27 @@ class ChainDB:
             },
             touch_keys=touch_keys,
             touch_all=touch_all,
+            last_round=last_round,
         )
 
     # -- streaming (A1/A2) ----------------------------------------------------
 
     #: mirror push order: facts (delta by round range), then state tables
-    #: (full, idempotent upsert), then boxes (upsert of live rows)
+    #: (the batch's changed keys, idempotent upsert), then boxes (upsert of
+    #: the batch's live keys plus its deletes)
     _MIRROR_FACTS = ("block_header", "txn", "txn_participation")
     _MIRROR_STATE = (
         "account", "account_asset", "asset", "app", "account_app", "metastate",
     )
+    #: state plane → the update stream whose keys a batch changed in it
+    _MIRROR_UPDATES = {
+        "account": transforms.account_updates,
+        "account_asset": transforms.account_asset_updates,
+        "asset": transforms.asset_updates,
+        "app": transforms.app_updates,
+        "account_app": transforms.account_app_updates,
+        "app_box": transforms.box_updates,
+    }
 
     def stream_ingest(
         self,
@@ -600,8 +642,13 @@ class ChainDB:
         """Push one ingested micro-batch to the external mirror.
 
         Facts move as a round-range DELTA (the batch's rounds only — at
-        cluster scale the fact tables dwarf any batch); state planes move
-        whole (bounded by live entities, merged by PK upsert).  A
+        cluster scale the fact tables dwarf any batch); each state plane
+        moves only the current rows of the keys this batch changed (a
+        semi-join of the store with the batch's update keys), so a push
+        costs O(changed rows) like the store merge itself.  The bounded
+        metastate moves whole, and so does the account plane in the batch
+        holding round 0, which carries the genesis allocations
+        (:meth:`load_genesis` writes them without a block delta).  A
         redelivered batch re-pushes the same rows and every statement is
         idempotent, so convergence needs no cross-sink transaction."""
         bounds = batch_df.agg(
@@ -617,7 +664,10 @@ class ChainDB:
                 ),
             )
         for t in self._MIRROR_STATE:
-            mirror.apply_state_batch(t, self.store.read(t))
+            whole = t == "metastate" or (t == "account" and bounds.lo == 0)
+            mirror.apply_state_batch(
+                t, self.store.read(t) if whole else self._changed_rows(t, batch_df)
+            )
         # app_box is the one physically-deleted state plane (A13): the
         # store DROPS delete-marked boxes in _merge_boxes, so pushing only
         # live rows would leave a box deleted after being mirrored in the
@@ -637,10 +687,16 @@ class ChainDB:
         )
         mirror.apply_state_batch(
             "app_box",
-            self.store.read("app_box")
+            self._changed_rows("app_box", batch_df)
             .withColumn("op", F.lit("upsert"))
             .unionByName(box_deletes),
         )
+
+    def _changed_rows(self, table: str, batch_df: DataFrame) -> DataFrame:
+        """The current rows of ``table`` whose keys ``batch_df`` updates."""
+        keys = TABLE_KEYS[table]
+        changed = self._MIRROR_UPDATES[table](batch_df).select(*keys)
+        return self.store.read(table).join(changed, keys, "left_semi")
 
     # -- health / pruning (A23, A25) -------------------------------------------
 

@@ -1,4 +1,4 @@
-"""Bucketed copy-on-write parquet store with MERGE semantics.
+"""Bucketed merge-on-read parquet store with MERGE semantics.
 
 The reference maintains its nine tables with `INSERT ... ON CONFLICT`
 prepared statements inside serializable transactions (writer.go:39-114,
@@ -7,22 +7,32 @@ this environment has bare parquet only, this module implements the minimal
 table format those semantics need:
 
 - every table is a manifest (JSON) pointing at immutable parquet files;
-- **state tables** are hash-bucketed by primary key.  A MERGE folds the
-  update stream per key, touches ONLY the buckets containing updated keys,
-  and rewrites just those buckets into a new version (copy-on-write at
-  bucket granularity) — untouched buckets are carried by reference.  At
-  100 TB with e.g. 4096 buckets, a block's worth of account updates
-  rewrites a handful of buckets, not the table;
+- **state tables** are hash-bucketed by primary key into per-bucket BASE
+  files plus ONE cumulative DELTA file (merge-on-read, the delta-plus-
+  snapshot layout of Spark's own streaming state store).  A MERGE folds
+  the update stream per key and writes only the delta: the old delta minus
+  the keys this batch changed again, plus this batch's merged rows
+  (deletes as tombstone rows) — O(changed rows), like the reference's
+  row-level upserts, not O(table).  A read resolves base and delta in one
+  scan: a base row is dropped when its key is in the delta's key set,
+  which the driver reads from the small delta file.  Once the delta holds
+  1/:data:`FOLD_RATIO` of the base rows, the next merge folds it into the
+  bases of the buckets it touches (copy-on-write at bucket granularity;
+  untouched buckets are carried by reference);
 - **fact tables** (txn, txn_participation, block_header) are append-only;
   each appended file records its (min_round, max_round) so readers prune
   files by round range — the scan-side replacement for the reference's
   B-tree PK index;
-- manifest swap is atomic (os.replace).  Production would swap a
-  transactional catalog (Delta/Iceberg) in behind the same API.
+- a commit writes the version's snapshot manifest, then swaps the live
+  manifest atomically (os.replace).  Production would swap a transactional
+  catalog (Delta/Iceberg) in behind the same API.
 
 Idempotence contract (SURVEY A2/A19): the ingest layer gates on the round
 high-water mark, so re-delivered micro-batches are skipped before they
-reach the store; fact appends additionally dedup on PK within the batch.
+reach the store; fact appends additionally dedup on PK within the batch and
+drop rounds at or below the table's round watermark, and a state merge
+tagged with a batch's last round is skipped when its manifest already
+records that round.
 """
 
 from __future__ import annotations
@@ -41,6 +51,14 @@ from sparkroach.chain.schemas import TABLE_KEYS, TABLE_SCHEMAS
 
 DEFAULT_BUCKETS = 16  # local test default; cluster deployments use 1024+
 
+#: A state merge folds the delta into the bases once the delta holds at
+#: least 1/FOLD_RATIO of the table's base rows (see ChainStore.merge_state).
+FOLD_RATIO = 8
+
+#: Delta-file column: TRUE marks a deleted key (tombstone), FALSE a live
+#: row.  Base files have no such column, so a scan reads it as NULL there.
+TOMB = "__tomb"
+
 STATE_TABLES = (
     "account",
     "account_asset",
@@ -56,10 +74,18 @@ FACT_TABLES = ("block_header", "txn", "txn_participation")
 @dataclass
 class Manifest:
     version: int = 0
-    # state tables: bucket id (as str) → relative parquet dir
+    # state tables: bucket id (as str) → relative parquet dir of its base
     buckets: dict[str, str] = field(default_factory=dict)
     # fact tables: [{path, min_round, max_round, rows}]
     files: list[dict] = field(default_factory=list)
+    # state tables: base rows per bucket id
+    bucket_rows: dict[str, int] = field(default_factory=dict)
+    # state tables: relative dir of the cumulative delta (None when empty)
+    # and its row count, tombstones included
+    delta: str | None = None
+    delta_rows: int = 0
+    # state tables: last round of the last batch merged (replay guard)
+    round: int | None = None
 
     @classmethod
     def load(cls, path: str) -> "Manifest":
@@ -67,13 +93,29 @@ class Manifest:
             return cls()
         with open(path) as f:
             d = json.load(f)
-        return cls(version=d["version"], buckets=d.get("buckets", {}), files=d.get("files", []))
+        return cls(
+            version=d["version"],
+            buckets=d.get("buckets", {}),
+            files=d.get("files", []),
+            bucket_rows=d.get("bucket_rows", {}),
+            delta=d.get("delta"),
+            delta_rows=d.get("delta_rows", 0),
+            round=d.get("round"),
+        )
 
     def save(self, path: str) -> None:
         tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
             json.dump(
-                {"version": self.version, "buckets": self.buckets, "files": self.files},
+                {
+                    "version": self.version,
+                    "buckets": self.buckets,
+                    "files": self.files,
+                    "bucket_rows": self.bucket_rows,
+                    "delta": self.delta,
+                    "delta_rows": self.delta_rows,
+                    "round": self.round,
+                },
                 f,
             )
         os.replace(tmp, path)
@@ -81,6 +123,13 @@ class Manifest:
 
 class ChainStore:
     """The nine maintained tables under one base directory."""
+
+    #: Fault-injection seam for crash tests.  When set, it is called as
+    #: ``fault_hook(table, point)`` at every commit: ``"commit"`` before
+    #: anything of the new version is published, and ``"snapshot"`` after
+    #: the snapshot manifest is written but before the live manifest
+    #: swap.  Raising from it stops the commit exactly there.
+    fault_hook = None
 
     def __init__(
         self,
@@ -91,6 +140,9 @@ class ChainStore:
         self.spark = spark
         self.base_dir = base_dir
         self.n_buckets = n_buckets
+        # table → ((delta dir, mtime), {canonical key: bucket}); delta
+        # files are immutable, so one entry per table is the live one
+        self._delta_cache: dict[str, tuple] = {}
         os.makedirs(base_dir, exist_ok=True)
 
     # -- manifest plumbing --------------------------------------------------
@@ -98,19 +150,25 @@ class ChainStore:
     def _manifest_path(self, table: str) -> str:
         return os.path.join(self.base_dir, table, "manifest.json")
 
-
     def _snapshot_path(self, table: str, version: int) -> str:
         return os.path.join(
             self.base_dir, table, f"manifest.v{version:06d}.json"
         )
 
+    def _fault(self, table: str, point: str) -> None:
+        if self.fault_hook is not None:
+            self.fault_hook(table, point)
+
     def _commit(self, table: str, m: Manifest) -> None:
-        """Atomically publish the new manifest AND retain it as an
-        immutable snapshot — the data files are already copy-on-write,
-        so retained snapshots make every committed version readable
-        (time travel) until :meth:`vacuum` reclaims it."""
-        m.save(self._manifest_path(table))
+        """Retain the new version as an immutable snapshot, THEN publish it
+        as the live manifest (atomic swap).  In this order a crash between
+        the two writes leaves the previous version live and the new one
+        merely retained, never a live version that time travel and
+        :meth:`vacuum` cannot see; a replay rewrites the same version."""
+        self._fault(table, "commit")
         m.save(self._snapshot_path(table, m.version))
+        self._fault(table, "snapshot")
+        m.save(self._manifest_path(table))
 
     def _manifest(self, table: str, version: int | None = None) -> Manifest:
         if version is None:
@@ -137,12 +195,13 @@ class ChainStore:
         return sorted(out)
 
     def vacuum(self, table: str, keep_snapshots: int = 2) -> tuple[int, int]:
-        """Reclaim copy-on-write storage: retain the newest
+        """Reclaim unreferenced storage: retain the newest
         ``keep_snapshots`` snapshot manifests (the live manifest is
         always among them — it IS the newest snapshot) and delete every
-        version directory no retained manifest references, plus the
-        expired snapshot files.  The Delta-VACUUM analog for this store;
-        time travel then reaches exactly the retained versions.
+        version directory no retained manifest references (base buckets,
+        delta files and fact files alike), plus the expired snapshot
+        files.  The Delta-VACUUM analog for this store; time travel then
+        reaches exactly the retained versions.
 
         Returns (version_dirs_deleted, snapshots_expired)."""
         import glob as _glob
@@ -157,7 +216,10 @@ class ChainStore:
         ]
         referenced: set[str] = set()
         for m in manifests:
-            for rel in list(m.buckets.values()) + [e["path"] for e in m.files]:
+            rels = list(m.buckets.values()) + [e["path"] for e in m.files]
+            if m.delta is not None:
+                rels.append(m.delta)
+            for rel in rels:
                 # dir-granular GC: the version dir is the reclaim unit
                 referenced.add(rel.split("/")[0])
         dirs_deleted = 0
@@ -180,38 +242,116 @@ class ChainStore:
     def _empty(self, table: str) -> DataFrame:
         return self.spark.createDataFrame([], TABLE_SCHEMAS[table])
 
+    def _key_sql(self, table: str) -> str:
+        """The canonical key string of a row as a SQL expression: key
+        columns rendered as text (binary as uppercase hex) and joined with
+        U+001F.  :meth:`_key_str` is its driver-side mirror."""
+        parts = []
+        for k in TABLE_KEYS[table]:
+            if isinstance(TABLE_SCHEMAS[table][k].dataType, T.BinaryType):
+                parts.append(f"hex(`{k}`)")
+            else:
+                parts.append(f"cast(`{k}` as string)")
+        return f"concat_ws(char(31), {', '.join(parts)})"
+
+    def _key_str(self, table: str, key: tuple) -> str:
+        parts = []
+        for k, v in zip(TABLE_KEYS[table], key):
+            if isinstance(TABLE_SCHEMAS[table][k].dataType, T.BinaryType):
+                parts.append(bytes(v).hex().upper())  # Spark hex() is uppercase
+            else:
+                parts.append(str(v))
+        return "\x1f".join(parts)
+
     def _bucket_col(self, table: str) -> F.Column:
-        """PK → bucket id, via a PORTABLE hash (md5 of a canonical key
+        """PK → bucket id, via a PORTABLE hash (md5 of the canonical key
         string) rather than Spark's Murmur3: the same function is
         computable driver-side (:meth:`bucket_of`), which is what lets a
         point read open ONE bucket instead of scanning the table — the
         store-side replacement for the reference's B-tree PK point reads
         (setup_cockroachdb.sql PKs)."""
-        parts = []
-        for k in TABLE_KEYS[table]:
-            f = TABLE_SCHEMAS[table][k]
-            if isinstance(f.dataType, T.BinaryType):
-                parts.append(F.hex(F.col(k)))
-            else:
-                parts.append(F.col(k).cast("string"))
-        canon = F.concat_ws("\x1f", *parts)
+        canon = F.expr(self._key_sql(table))
         h = F.conv(F.substring(F.md5(canon), 1, 8), 16, 10).cast("long")
         return F.pmod(h, F.lit(self.n_buckets))
 
-    def bucket_of(self, table: str, key: tuple) -> int:
-        """Driver-side mirror of :meth:`_bucket_col` for point reads."""
+    def _bucket_of_str(self, canon: str) -> int:
         import hashlib
 
-        parts = []
-        for k, v in zip(TABLE_KEYS[table], key):
-            f = TABLE_SCHEMAS[table][k]
-            if isinstance(f.dataType, T.BinaryType):
-                parts.append(bytes(v).hex().upper())  # Spark hex() is uppercase
-            else:
-                parts.append(str(v))
-        canon = "\x1f".join(parts)
         h = int(hashlib.md5(canon.encode("utf-8")).hexdigest()[:8], 16)
         return h % self.n_buckets
+
+    def bucket_of(self, table: str, key: tuple) -> int:
+        """Driver-side mirror of :meth:`_bucket_col` for point reads."""
+        return self._bucket_of_str(self._key_str(table, key))
+
+    def _delta_keys(self, table: str, m: Manifest) -> dict[str, int]:
+        """Canonical key → bucket of every row in ``m``'s delta,
+        tombstones included, read on the driver with pyarrow.  The fold
+        rule bounds it at 1/FOLD_RATIO of the base rows plus one batch."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        if m.delta is None:
+            return {}
+        d = os.path.join(self.base_dir, table, m.delta)
+        tag = (d, os.stat(d).st_mtime_ns)
+        hit = self._delta_cache.get(table)
+        if hit is not None and hit[0] == tag:
+            return hit[1]
+        keys = TABLE_KEYS[table]
+        out: dict[str, int] = {}
+        for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
+            t = pq.read_table(f, columns=keys)
+            for key in zip(*(t.column(k).to_pylist() for k in keys)):
+                canon = self._key_str(table, key)
+                out[canon] = self._bucket_of_str(canon)
+        self._delta_cache[table] = (tag, out)
+        return out
+
+    def _scan(
+        self, table: str, m: Manifest, buckets: set[int] | None = None
+    ) -> DataFrame:
+        """ONE parquet scan over the base files of ``buckets`` (all when
+        None) plus the delta.  Every row carries :data:`TOMB`: NULL on a
+        base row, the tombstone flag on a delta row.  A base row whose key
+        the delta holds is dropped by a driver-side key-set filter, so the
+        result has one row per key and needs no join, window or extra
+        Spark job to resolve."""
+        schema = TABLE_SCHEMAS[table]
+        rels = sorted(
+            {
+                rel
+                for b, rel in m.buckets.items()
+                if buckets is None or int(b) in buckets
+            }
+        )
+        if m.delta is not None:
+            rels.append(m.delta)
+        if not rels:
+            return self._empty(table).withColumn(
+                TOMB, F.lit(None).cast("boolean")
+            )
+        paths = [os.path.join(self.base_dir, table, p) for p in rels]
+        if m.delta is None:
+            return self.spark.read.schema(schema).parquet(*paths).withColumn(
+                TOMB, F.lit(None).cast("boolean")
+            )
+        df = self.spark.read.schema(
+            T.StructType(schema.fields + [T.StructField(TOMB, T.BooleanType())])
+        ).parquet(*paths)
+        shadowed = [
+            k
+            for k, b in self._delta_keys(table, m).items()
+            if buckets is None or b in buckets
+        ]
+        if shadowed:
+            in_list = ", ".join(f"'{k}'" for k in sorted(shadowed))
+            df = df.where(
+                F.col(TOMB).isNotNull()
+                | ~F.expr(f"{self._key_sql(table)} IN ({in_list})")
+            )
+        return df
 
     # -- reads ----------------------------------------------------------------
 
@@ -224,39 +364,38 @@ class ChainStore:
         version: int | None = None,
     ) -> DataFrame:
         """Current snapshot — or, with ``version``, TIME TRAVEL to any
-        retained committed version (the data files are copy-on-write and
-        every commit retains its manifest until vacuum, so an old version
-        is just an old file listing).  For fact tables a round range
-        prunes files before Spark ever lists them (manifest min/max
-        stats).  For state tables a full PK ``key`` prunes to the ONE
-        bucket that can hold it (portable-hash bucketing) — a point read
-        touches 1/n_buckets of the table, like the reference's B-tree PK
-        lookup.  The key predicate itself is still applied by the caller;
-        this only narrows the file listing."""
+        retained committed version (data files are never rewritten in
+        place and every commit retains its manifest until vacuum, so an
+        old version is just an old file listing).  For fact tables a round
+        range prunes files before Spark ever lists them (manifest min/max
+        stats).  A state table resolves its bases and its delta in one
+        scan (:meth:`_scan`) and drops tombstones; a full PK ``key``
+        prunes the bases to the ONE bucket that can hold it (portable-hash
+        bucketing), so a point read lists that bucket plus the delta, like
+        the reference's B-tree PK lookup.  The key predicate itself is
+        still applied by the caller; this only narrows the file listing."""
         m = self._manifest(table, version)
         schema = TABLE_SCHEMAS[table]
         if table in STATE_TABLES:
-            if key is not None:
-                b = str(self.bucket_of(table, key))
-                paths = [m.buckets[b]] if b in m.buckets else []
-            else:
-                paths = sorted(set(m.buckets.values()))
-        else:
-            paths = [
-                e["path"]
-                for e in m.files
-                if (min_round is None or e["max_round"] >= min_round)
-                and (max_round is None or e["min_round"] <= max_round)
-            ]
+            buckets = None if key is None else {self.bucket_of(table, key)}
+            df = self._scan(table, m, buckets)
+            if m.delta is not None:
+                df = df.where(~F.coalesce(F.col(TOMB), F.lit(False)))
+            return df.select(*schema.fieldNames())
+        paths = [
+            e["path"]
+            for e in m.files
+            if (min_round is None or e["max_round"] >= min_round)
+            and (max_round is None or e["min_round"] <= max_round)
+        ]
         if not paths:
             return self._empty(table)
         abs_paths = [os.path.join(self.base_dir, table, p) for p in paths]
         df = self.spark.read.schema(schema).parquet(*abs_paths)
-        if table in FACT_TABLES:
-            if min_round is not None:
-                df = df.where(F.col("round") >= min_round)
-            if max_round is not None:
-                df = df.where(F.col("round") <= max_round)
+        if min_round is not None:
+            df = df.where(F.col("round") >= min_round)
+        if max_round is not None:
+            df = df.where(F.col("round") <= max_round)
         return df
 
     # -- fact append ----------------------------------------------------------
@@ -283,7 +422,7 @@ class ChainStore:
         from pyspark.sql import Observation
 
         m = self._manifest(table)
-        watermark = max((e["max_round"] for e in m.files), default=None)
+        watermark = _watermark(m)
         if watermark is not None:
             rows = rows.where(F.col("round") > watermark)
 
@@ -314,6 +453,12 @@ class ChainStore:
         m.version = version
         self._commit(table, m)
         return stats["n"]
+
+    def fact_watermark(self, table: str) -> int | None:
+        """Highest round in a fact table (None when empty), from the
+        manifest stats.  An append of rounds at or below it writes
+        nothing, so a replay can skip it without a Spark job."""
+        return _watermark(self._manifest(table))
 
     def compact_facts(
         self, table: str, target_rows: int = 1_000_000
@@ -433,127 +578,172 @@ class ChainStore:
         merge_cols: dict[str, F.Column],
         touch_keys: DataFrame | None = None,
         touch_all: bool = False,
+        last_round: int | None = None,
     ) -> None:
-        """Copy-on-write MERGE: ``folded`` is one row per key (the ingest
+        """Merge-on-read MERGE: ``folded`` is one row per key (the ingest
         layer folds the update stream first) with whatever helper columns
         ``merge_cols`` references via ``u.<col>`` / ``e.<col>``.
 
         merge_cols maps every output column to an expression over the
-        updates (alias ``u``) joined to existing rows (alias ``e``); an
-        expression sees NULL ``e.*`` for a brand-new key, exactly as under
-        a left join (physically the merge runs one FULL OUTER join so the
-        fold and the bucket scan execute once — untouched rows in a dirty
-        bucket carry over on the e-only side of the same join).  Rows
-        where merge_cols['__drop__'] (optional) evaluates true are
-        physically removed (app_box delete).  NULL-evaluating ``__drop__``
-        expressions KEEP the row (the filter is
-        ``~coalesce(present & drop, false)`` — null-safe, so e-only
-        carry-overs and three-valued-logic NULLs are never swept); a
-        caller that wants NULL to mean delete must coalesce its own
-        expression.  Pinned by
-        test_merge_drop_null_evaluates_to_keep.
+        updates (alias ``u``) joined to the current rows (alias ``e``, base
+        and delta resolved by :meth:`_scan`); an expression sees NULL
+        ``e.*`` for a brand-new key or a key whose current row is a
+        tombstone, exactly as under a left join (physically the merge runs
+        one FULL OUTER join so the fold and the scan execute once).  Rows
+        where merge_cols['__drop__'] (optional) evaluates true are deleted
+        (app_box delete).  NULL-evaluating ``__drop__`` expressions KEEP
+        the row (the test is ``coalesce(present & drop, false)`` —
+        null-safe, so carry-overs and three-valued-logic NULLs are never
+        swept); a caller that wants NULL to mean delete must coalesce its
+        own expression.  Pinned by test_merge_drop_null_evaluates_to_keep.
+
+        What is written:
+
+        - normally ONLY a new delta: the old delta's rows for keys this
+          batch did not change, plus this batch's merged rows (a deleted
+          key as a tombstone row).  Base files are untouched, so the write
+          is O(changed rows), not O(table);
+        - a FOLD when the delta this merge starts from already holds at
+          least 1/:data:`FOLD_RATIO` of the base rows: the live rows of
+          every bucket the old delta or this batch touches are rewritten
+          as new bases (tombstoned keys physically removed; untouched
+          buckets are carried by reference) and the delta empties.
+
+        Either way one manifest swap publishes the version.
 
         ``touch_keys`` (optional) is any DataFrame carrying the table's key
         columns for every updated key (duplicates fine — typically the
         UN-folded update stream).  When given, the touched-bucket set is
         collected from that cheap projection (column pruning strips the
-        fold/UDF/join work) and the full fold chain runs exactly once,
-        inside the write job — instead of being materialized into cache
-        just to learn the bucket list.  One pass over the updates, not two.
+        fold/UDF/join work) and only those buckets' bases are scanned for
+        current rows; the full fold chain runs exactly once, inside the
+        write job.  Without it (and without ``touch_all``) ``folded`` is
+        cached to learn the buckets.
 
         ``touch_all`` skips the touched-bucket discovery job entirely and
-        treats every bucket as dirty.  The ingest layer sets it when its
+        treats every bucket as touched.  The ingest layer sets it when its
         (already-collected) update count says the batch is dense enough
         that essentially every bucket collides anyway — the discovery job
-        would cost a Spark job to learn "all of them".  Sparse updates (the
-        100 TB steady state, thousands of buckets) keep the pruned path.
+        would cost a Spark job to learn "all of them".
+
+        ``last_round`` (optional) tags the version with the batch's last
+        round.  A merge whose manifest already records that round or a
+        later one replays an applied batch and is skipped, so a batch
+        replayed after a crash converges to the same versions as a run
+        without the crash.
         """
         # metastate has its own driver-side commit path (merge_metastate);
         # its single-file layout is incompatible with hash-bucket touch sets
         assert table != "metastate", "use merge_metastate"
-        keys = TABLE_KEYS[table]
         m = self._manifest(table)
+        if last_round is not None and m.round is not None and m.round >= last_round:
+            return
         version = m.version + 1
+        fold = FOLD_RATIO * m.delta_rows >= sum(m.bucket_rows.values())
 
         cached = touch_keys is None and not touch_all
         if touch_all:
-            folded = folded.withColumn("__bucket", self._bucket_col(table))
-            touched = list(range(self.n_buckets))
+            touched = set(range(self.n_buckets))
         else:
             if cached:
-                folded = folded.withColumn("__bucket", self._bucket_col(table)).cache()
-                key_src = folded
-            else:
-                folded = folded.withColumn("__bucket", self._bucket_col(table))
-                key_src = touch_keys.withColumn("__bucket", self._bucket_col(table))
-            touched = [
-                r["__bucket"] for r in key_src.select("__bucket").distinct().collect()
-            ]
-        if not touched:
+                folded = folded.cache()
+            key_src = folded if cached else touch_keys
+            touched = {
+                r[0]
+                for r in key_src.select(self._bucket_col(table)).distinct().collect()
+            }
+        try:
+            if touched:
+                if fold:
+                    touched |= set(self._delta_keys(table, m).values())
+                self._write_merge(
+                    table, m, version, folded, merge_cols, touched, fold
+                )
+                if last_round is not None:
+                    m.round = last_round
+                m.version = version
+                self._commit(table, m)
+        finally:
             if cached:
                 folded.unpersist()
-            return
 
-        # existing rows from touched buckets only
-        paths = [
-            os.path.join(self.base_dir, table, m.buckets[str(b)])
-            for b in touched
-            if str(b) in m.buckets
-        ]
-        if paths:
-            existing = self.spark.read.schema(TABLE_SCHEMAS[table]).parquet(*paths)
-        else:
-            existing = self._empty(table)
-        existing = existing.withColumn("__bucket", self._bucket_col(table))
-        existing = existing.where(F.col("__bucket").isin(touched))
+    def _write_merge(
+        self,
+        table: str,
+        m: Manifest,
+        version: int,
+        folded: DataFrame,
+        merge_cols: dict[str, F.Column],
+        touched: set[int],
+        fold: bool,
+    ) -> None:
+        """The write half of :meth:`merge_state`; updates ``m`` in place."""
+        from pyspark.sql import Observation
 
-        # One FULL OUTER join replaces the old (u LEFT JOIN e) ∪ (e ANTI u)
-        # pair: the fold subtree over the update stream and the
-        # existing-bucket parquet scan each execute ONCE instead of twice,
-        # sharing one key exchange (the anti-join used to re-run the whole
-        # grouped fold just to produce its key list, and re-read every
-        # touched bucket file).  A row is an update when its u side is
-        # present, an untouched carry-over when only e is present; the
-        # merge_cols expressions see exactly the nullability the old left
-        # join gave them in both cases.
+        keys = TABLE_KEYS[table]
+        # current rows: the touched buckets' bases plus the whole delta.
+        # A tombstone keeps its key (for the join and for carrying it
+        # over) but shows NULL in every e.<col> the merge expressions see.
+        gone = F.coalesce(F.col(TOMB), F.lit(False))
+        e = self._scan(table, m, touched).select(
+            *[F.col(k).alias(f"__k_{k}") for k in keys],
+            *[
+                F.when(~gone, F.col(c)).alias(c)
+                for c in TABLE_SCHEMAS[table].fieldNames()
+            ],
+            TOMB,
+        ).alias("e")
         u = folded.withColumn("__present", F.lit(True)).alias("u")
-        e = existing.alias("e")
-        cond = [F.col(f"u.{k}") == F.col(f"e.{k}") for k in keys]
+        cond = [F.col(f"u.{k}") == F.col(f"e.__k_{k}") for k in keys]
 
+        # A row is an update when its u side is present, a carry-over when
+        # only e is present; the merge_cols expressions see exactly the
+        # nullability a left join would give them in both cases.
+        upd = F.col("u.__present").isNotNull()
         drop_expr = merge_cols.get("__drop__")
-        upd_present = F.col("u.__present").isNotNull()
+        drop = F.lit(False) if drop_expr is None else F.coalesce(drop_expr, F.lit(False))
         out_cols = [
-            F.when(upd_present, expr).otherwise(F.col(f"e.{name}")).alias(name)
+            F.when(upd, expr)
+            .otherwise(F.col(f"e.__k_{name}" if name in keys else f"e.{name}"))
+            .alias(name)
             for name, expr in merge_cols.items()
             if name != "__drop__"
         ]
-        new_data = u.join(e, cond, "full_outer")
-        if drop_expr is not None:
-            # drop only matched/update rows the caller marks (__drop__ is
-            # an expression over u/e); carried-over e-only rows never drop
-            new_data = new_data.where(
-                ~F.coalesce(upd_present & drop_expr, F.lit(False))
-            )
-        new_data = new_data.select(
-            *out_cols,
-            F.coalesce(F.col("u.__bucket"), F.col("e.__bucket")).alias("__bucket"),
-        )
+        tomb = F.when(upd, drop).otherwise(F.col(f"e.{TOMB}"))
+        joined = u.join(e, cond, "full_outer")
 
         vdir = self._new_version_dir(table, version)
-        new_data.write.mode("overwrite").partitionBy("__bucket").parquet(vdir)
-
         rel = os.path.relpath(vdir, os.path.join(self.base_dir, table))
-        for b in touched:
-            bucket_dir = os.path.join(vdir, f"__bucket={b}")
-            if os.path.exists(bucket_dir):
-                m.buckets[str(b)] = f"{rel}/__bucket={b}"
-            else:
-                # all rows in this bucket were deleted
-                m.buckets.pop(str(b), None)
-        m.version = version
-        self._commit(table, m)
-        if cached:
-            folded.unpersist()
+        if fold:
+            live = joined.where(~F.coalesce(tomb, F.lit(False))).select(*out_cols)
+            live.withColumn("__bucket", self._bucket_col(table)).write.mode(
+                "overwrite"
+            ).partitionBy("__bucket").parquet(vdir)
+            for b in touched:
+                bucket_dir = os.path.join(vdir, f"__bucket={b}")
+                if os.path.exists(bucket_dir):
+                    m.buckets[str(b)] = f"{rel}/__bucket={b}"
+                    m.bucket_rows[str(b)] = _parquet_rows(bucket_dir)
+                else:
+                    # all rows in this bucket were deleted
+                    m.buckets.pop(str(b), None)
+                    m.bucket_rows.pop(str(b), None)
+            m.delta, m.delta_rows = None, 0
+            return
+        # the new delta: this batch's rows plus the old delta's rows for
+        # keys this batch did not change (the e-only rows that carry a
+        # tombstone flag, i.e. came from the delta, not from a base)
+        obs = Observation()
+        delta = (
+            joined.where(upd | F.col(f"e.{TOMB}").isNotNull())
+            .select(*out_cols, tomb.alias(TOMB))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+        )
+        out = os.path.join(vdir, "delta")
+        delta.write.mode("overwrite").parquet(out)
+        n = obs.get["n"]
+        m.delta = f"{rel}/delta" if n else None
+        m.delta_rows = n
 
     # -- metastate convenience -------------------------------------------------
 
@@ -582,7 +772,8 @@ class ChainStore:
         schema/metastate.go:4-11) — the moral equivalent of a transaction-log
         write.  Launching a Spark MERGE job for a 2-row upsert costs ~1 s of
         pure scheduling; a driver parquet write costs milliseconds and keeps
-        the same manifest-swap atomicity."""
+        the same commit protocol (:meth:`_commit`: snapshot, then the
+        atomic live swap)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -601,7 +792,23 @@ class ChainStore:
             "0": os.path.relpath(out, os.path.join(self.base_dir, "metastate"))
         }
         m.version = version
-        m.save(self._manifest_path("metastate"))
+        self._commit("metastate", m)
 
     def set_metastate(self, key: str, value: str) -> None:
         self.merge_metastate({key: value})
+
+
+def _parquet_rows(d: str) -> int:
+    """Row count of a parquet directory, from its file footers."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(f).num_rows
+        for f in glob.glob(os.path.join(d, "*.parquet"))
+    )
+
+
+def _watermark(m: Manifest) -> int | None:
+    return max((e["max_round"] for e in m.files), default=None)

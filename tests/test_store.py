@@ -58,8 +58,9 @@ def test_append_watermark_drops_replayed_rounds(store, spark):
 
 
 def test_merge_state_touches_only_dirty_buckets(store, spark):
-    """Copy-on-write MERGE: a one-key update must rewrite only the bucket
-    holding that key; the other buckets' files are carried by reference."""
+    """Merge-on-read MERGE: a one-key update rewrites NO base bucket and
+    writes one delta holding just that key; every base file is carried by
+    reference and the read still resolves all 40 rows."""
     rows = [(i, bytes([i]) * 8, "{}", False, 0, None) for i in range(40)]
     df = spark.createDataFrame(rows, TABLE_SCHEMAS["asset"])
     folded = df.select(
@@ -79,13 +80,15 @@ def test_merge_state_touches_only_dirty_buckets(store, spark):
         "closed_at": F.coalesce(F.col("u.last_delete_round"), F.col("e.closed_at")),
     }
     store.merge_state("asset", folded, cols, touch_keys=df.select("id"))
-    before = dict(store._manifest("asset").buckets)
+    before = store._manifest("asset")
+    assert before.delta is None and sum(before.bucket_rows.values()) == 40
 
     one = folded.where(F.col("id") == 7)
     store.merge_state("asset", one, cols, touch_keys=one.select("id"))
-    after = dict(store._manifest("asset").buckets)
-    changed = [b for b in after if after[b] != before.get(b)]
-    assert len(changed) == 1  # exactly the bucket containing id=7
+    after = store._manifest("asset")
+    assert after.buckets == before.buckets  # no base bucket rewritten
+    assert after.delta is not None and after.delta_rows == 1
+    assert store._delta_keys("asset", after) == {"7": store.bucket_of("asset", (7,))}
     assert store.read("asset").count() == 40
 
 
@@ -243,11 +246,13 @@ def test_time_travel_reads_the_old_state(store, spark):
 
 
 def test_merge_full_outer_semantics_in_one_pass(store, spark):
-    """The r8 merge restructure (one FULL OUTER join instead of
-    left-join + anti-join) must preserve, within a single touched bucket:
-    an updated key, a __drop__'d key, an untouched carry-over key, and a
-    brand-new key whose merge expressions see NULL e.* (left-join
-    nullability)."""
+    """The one FULL OUTER join of a merge must preserve, within a single
+    touched bucket: an updated key, a __drop__'d key, an untouched
+    carry-over key, and a brand-new key whose merge expressions see NULL
+    e.* (left-join nullability).  Below the fold threshold all of it lands
+    in the delta — the dropped key as a tombstone that hides its base row
+    — and a key re-inserted over its tombstone sees NULL e.* too, here in
+    the merge that folds the delta into the base."""
     from pyspark.sql import functions as F
 
     from sparkroach.chain.schemas import TABLE_SCHEMAS
@@ -280,21 +285,33 @@ def test_merge_full_outer_semantics_in_one_pass(store, spark):
         seed,
         touch_all=True,
     )
+    base = store._manifest("app_box").buckets
     store.merge_state(
         "app_box",
         box_rows([(1, b"upd", b"v1"), (1, b"gone", b"DROP"), (1, b"ins", b"v1")]),
         cols,
         touch_all=True,
     )
-    out = {
-        bytes(r["name"]): bytes(r["value"])
-        for r in store.read("app_box").collect()
-    }
-    assert out == {
+    m = store._manifest("app_box")
+    assert m.buckets == base and m.delta_rows == 3  # tombstone included
+
+    def names():
+        return {
+            bytes(r["name"]): bytes(r["value"])
+            for r in store.read("app_box").collect()
+        }
+
+    assert names() == {
         b"upd": b"v1",        # matched update took u.value
         b"keep": b"v0",       # untouched carry-over survived the pass
         b"ins": b"new:v1",    # unmatched u row saw NULL e.* (insert)
-    }                          # b"gone" physically removed by __drop__
+    }                          # b"gone" hidden by its tombstone
+
+    store.merge_state("app_box", box_rows([(1, b"gone", b"back")]), cols, touch_all=True)
+    assert store._manifest("app_box").delta is None  # 3 delta rows >= 3 / 8: folded
+    assert names() == {
+        b"upd": b"v1", b"keep": b"v0", b"ins": b"new:v1", b"gone": b"new:back",
+    }
 
 
 def test_merge_drop_null_evaluates_to_keep(store, spark):
@@ -369,3 +386,115 @@ def test_vacuum_reclaims_and_bounds_time_travel(store, spark):
     assert [bytes(r["value"]) for r in store.read("app_box").collect()] == [
         b"v3"
     ]
+
+
+# -- merge-on-read: delta resolution, fold, time travel, vacuum ---------------
+
+
+def _box_rows(spark, triples):
+    return spark.createDataFrame(list(triples), TABLE_SCHEMAS["app_box"])
+
+
+def _box_seed():
+    return {"app": F.col("u.app"), "name": F.col("u.name"), "value": F.col("u.value")}
+
+
+def _boxes(store, version=None, key=None):
+    return {
+        (r["app"], bytes(r["name"])): bytes(r["value"])
+        for r in store.read("app_box", version=version, key=key).collect()
+    }
+
+
+def _seed_boxes(store, spark, n=40):
+    """A base of ``n`` boxes (the first merge of an empty table folds)."""
+    store.merge_state(
+        "app_box",
+        _box_rows(spark, [(i % 5, b"b%02d" % i, b"v0") for i in range(n)]),
+        _box_seed(),
+        touch_all=True,
+    )
+    return {(i % 5, b"b%02d" % i): b"v0" for i in range(n)}
+
+
+def test_fold_keeps_table_content_and_time_travel(store, spark):
+    """Once the delta holds 1/FOLD_RATIO of the base rows, the next merge
+    folds it into the bases: the delta empties, only the buckets it
+    touched get new bases, the content is what merge-on-read showed, and
+    every version from before the fold still reads as it did."""
+    from sparkroach.chain.store import FOLD_RATIO
+
+    want = _seed_boxes(store, spark)
+    history = {}
+    i = 0
+    while FOLD_RATIO * store._manifest("app_box").delta_rows < 40:
+        key = (i % 5, b"b%02d" % i)
+        store.merge_state(
+            "app_box", _box_rows(spark, [(*key, b"v%d" % i)]), _box_seed(), touch_all=True
+        )
+        want[key] = b"v%d" % i
+        history[store._manifest("app_box").version] = dict(want)
+        i += 1
+    pre = store._manifest("app_box")
+    assert pre.delta_rows == 5 and _boxes(store) == want
+
+    # the fold merge re-writes an unchanged value: content must not move
+    same = _box_rows(spark, [(0, b"b00", want[(0, b"b00")])])
+    store.merge_state(
+        "app_box", same, _box_seed(), touch_keys=same.select("app", "name")
+    )
+    post = store._manifest("app_box")
+    assert post.delta is None and post.delta_rows == 0
+    assert sum(post.bucket_rows.values()) == 40
+    touched = set(store._delta_keys("app_box", pre).values())
+    touched.add(store.bucket_of("app_box", (0, b"b00")))
+    rewritten = {b for b in post.buckets if post.buckets[b] != pre.buckets.get(b)}
+    assert rewritten == {str(b) for b in touched}
+    assert _boxes(store) == want
+    for v, content in history.items():
+        assert _boxes(store, version=v) == content, v
+
+
+def test_vacuum_keeps_referenced_delta_files(store, spark):
+    """vacuum must keep every delta a retained manifest references (and the
+    bases it resolves over, which live in older version dirs)."""
+    import os
+
+    want = _seed_boxes(store, spark)
+    for i in range(3):
+        key = (i, b"b%02d" % i)
+        store.merge_state(
+            "app_box", _box_rows(spark, [(*key, b"d%d" % i)]), _box_seed(), touch_all=True
+        )
+        want[key] = b"d%d" % i
+    versions = store.snapshot_versions("app_box")
+    m = store._manifest("app_box")
+    assert m.delta is not None
+    store.vacuum("app_box", keep_snapshots=2)
+    tdir = os.path.join(store.base_dir, "app_box")
+    kept = {d for d in os.listdir(tdir) if d.startswith("v")}
+    prev = store._manifest("app_box", versions[-2])
+    for rel in [m.delta, prev.delta, *m.buckets.values()]:
+        assert rel.split("/")[0] in kept, rel
+    assert _boxes(store) == want
+    assert _boxes(store, version=versions[-2])[(2, b"b02")] == b"v0"
+
+
+def test_point_read_lists_its_bucket_plus_the_delta(store, spark):
+    """With a delta present a point read lists its one base bucket plus the
+    delta file, and still resolves a key the delta updated or deleted."""
+    _seed_boxes(store, spark)
+    store.merge_state(
+        "app_box",
+        _box_rows(spark, [(0, b"b00", b"new"), (1, b"b01", b"DROP")]),
+        {**_box_seed(), "__drop__": F.col("u.value") == F.lit(b"DROP")},
+        touch_all=True,
+    )
+    m = store._manifest("app_box")
+    for key, want in (((0, b"b00"), {(0, b"b00"): b"new"}), ((1, b"b01"), {})):
+        df = store.read("app_box", key=key)
+        dirs = {f.split("/app_box/")[1].rsplit("/", 1)[0] for f in df.inputFiles()}
+        assert dirs <= {m.buckets[str(store.bucket_of("app_box", key))], m.delta}
+        assert m.delta in dirs
+        got = {k: v for k, v in _boxes(store, key=key).items() if k == key}
+        assert got == want
